@@ -108,49 +108,49 @@ _PRIORITY: tuple[str, ...] = (
 # first-time names), and in r6, with only 18 never-verified left, they
 # land at positions 19-25 and all get re-verified.  Once re-greened
 # they auto-deactivate via ``_GREEN_ROUND``; nothing to hand-edit.
-_REVERIFY_QUEUE: dict[str, int] = {
-    # name -> first round whose green row counts as post-change
-    "q18_ngram_jaccard_dupes": 4,
-    "q63_duplicate_clusters": 4,
-    "q82_dedup_kept_corpus": 4,
-    "q121_lsh_quality_audit": 4,
-    "q134_duplicate_clusters_star": 4,
-    "q149_containment_pairs": 4,
-    "q209_cluster_best_rep": 4,
+_REVERIFY_EVENTS: tuple[tuple[str, int], ...] = (
+    # (name, first round whose green row counts as post-change)
+    ("q18_ngram_jaccard_dupes", 4),
+    ("q63_duplicate_clusters", 4),
+    ("q82_dedup_kept_corpus", 4),
+    ("q121_lsh_quality_audit", 4),
+    ("q134_duplicate_clusters_star", 4),
+    ("q149_containment_pairs", 4),
+    ("q209_cluster_best_rep", 4),
     # round 6: q64 rewritten to the segment (lead + gap-explode) LOCF
     # formulation — outputs hash-identical at sf0.01/sf0.001 (builder
     # driver_sim green both), but the registered plan changed, so the
     # green row should postdate the rewrite.
-    "q64_hourly_locf": 6,
+    ("q64_hourly_locf", 6),
     # round 6 sf0.1 sweep: latent cross-engine divergence fixed with a
     # SEMANTIC change (computed per-part effects round4-quantized
     # before the decimal rollup) — the old green row verified the old
     # semantics. (q238's twin fix needs no queue entry: it has never
     # had a green driver row, so it is in the window as never-verified
     # already.)
-    "q196_pvm_bridge": 6,
+    ("q196_pvm_bridge", 6),
     # round 7: both registered plans sample-bounded (VERDICT r6 #1/#3);
     # round 8: rewired onto the shared fixed_sample/fixed_sample_ctes
     # helper (VERDICT r7 #6 — outputs hash-identical, builder-verified
     # at all 3 SFs, but the registered plan + oracle text changed).
-    "q256_margin_candidate_mining": 8,
-    "q248_lsh_scurve_sweep": 8,
+    ("q256_margin_candidate_mining", 8),
+    ("q248_lsh_scurve_sweep", 8),
     # round 7: rows-per-band ladder cap raised 8 -> 12 after the 100x
     # probe (r=8 saturated the sig space above ~8k vectors/side).
     # Outputs at every driver SF are unchanged (the new rungs engage
     # only at probe scale), but plan + oracle text changed.
-    "q256b_margin_mining_lsh": 7,
+    ("q256b_margin_mining_lsh", 7),
     # round 8: q264/q272's exact ground-truth legs sample-bounded with
     # the shared fixed_sample helper (VERDICT r7 #1 — the query set is
     # now a fixed-size md5-bucket sample; modulus 1 at every test SF so
     # outputs are unchanged there, but the registered plans + oracles
     # changed).
-    "q264_ivf_recall_sweep": 8,
-    "q272_pq_codebook_audit": 8,
+    ("q264_ivf_recall_sweep", 8),
+    ("q272_pq_codebook_audit", 8),
     # round 8: SimHash family migrated to the 60-bit fingerprint
     # (VERDICT r7 #2; q21's r8+ green row still covers it — the
     # fingerprint is untouched since).
-    "q21_simhash": 8,
+    ("q21_simhash", 8),
     # round 8: q268/q277's groupBy key digested to a fixed-width md5
     # prefix on both engines (VERDICT r7 #3 — ~5x less shuffle bytes;
     # spans identical, plan + oracle text changed).
@@ -160,9 +160,9 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # instead of four times (oracle untouched; outputs hash-identical
     # at sf0.001/sf0.01 in the builder's driver_sim, but the
     # registered plans changed shape). q281 consumes the same helper.
-    "q268_repeated_passages": 12,
-    "q277_passage_scrub_savings": 12,
-    "q281_granularity_agreement": 12,
+    ("q268_repeated_passages", 12),
+    ("q277_passage_scrub_savings", 12),
+    ("q281_granularity_agreement", 12),
     # round 12 (optimization): containment_pairs emits both directions
     # map-side from ONE evaluation of the pair+size join instead of a
     # unionAll that inlined the whole subtree twice (measured -31% at
@@ -170,13 +170,13 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # untouched). Candidate persists for the jaccard family were
     # measured (q18/q63/q273/q276) and REJECTED as regressions — those
     # plans are byte-identical to round 11, so they are not queued.
-    "q149_containment_pairs": 12,
+    ("q149_containment_pairs", 12),
     # round 12 (optimization): ppjoin_pairs caches its verification
     # array frame — consumed by both verify dims on different join
     # keys, the collect_list+sort aggregate ran twice (q144 measured
     # 9.7->5.1 s same-context at sf0.1; output-identical, driver_sim
     # green at sf0.01/sf0.001).
-    "q144_ppjoin_pairs": 12,
+    ("q144_ppjoin_pairs", 12),
     # round 12 (optimization): the symmetrize/flag/credit unions that
     # inlined their (often expensive) source subtree once per
     # orientation are now map-side two/three-way explodes of ONE
@@ -186,47 +186,47 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # q198's degree count, q281's pair-member flag. Outputs identical
     # (driver_sim green at sf0.01 for all 14 touched names; oracles
     # untouched); measured -9% to -25% at sf0.1.
-    "q82_dedup_kept_corpus": 12,
-    "q103_pagerank_trade_graph": 12,
-    "q116_copurchase_triangles": 12,
-    "q139_corpus_pipeline_report": 12,
-    "q155_kcore_peeling": 12,
-    "q173_leakage_free_split": 12,
-    "q175_entity_resolution": 12,
-    "q179_lpa_communities": 12,
-    "q182_dedup_savings": 12,
-    "q198_degree_powerlaw": 12,
-    "q209_cluster_best_rep": 12,
-    "q228_chaining_audit": 12,
-    "q288_cluster_churn_audit": 12,
+    ("q82_dedup_kept_corpus", 12),
+    ("q103_pagerank_trade_graph", 12),
+    ("q116_copurchase_triangles", 12),
+    ("q139_corpus_pipeline_report", 12),
+    ("q155_kcore_peeling", 12),
+    ("q173_leakage_free_split", 12),
+    ("q175_entity_resolution", 12),
+    ("q179_lpa_communities", 12),
+    ("q182_dedup_savings", 12),
+    ("q198_degree_powerlaw", 12),
+    ("q209_cluster_best_rep", 12),
+    ("q228_chaining_audit", 12),
+    ("q288_cluster_churn_audit", 12),
     # round 9: SimHash banding migrated to the size-adaptive block-
     # combination ladder (VERDICT r8 #1 — rung from the in-plan
     # fingerprint count; published pair sets CHANGE at every SF: rung 1
     # is exact for Hamming<=5, so q79/q274 gained the pairs the fixed
     # 4x15 layout missed — these entries supersede their round-8 ones).
     # q21's fingerprints are untouched by the ladder.
-    "q79_simhash_hamming_pairs": 9,
-    "q274_simhash_quality_audit": 9,
+    ("q79_simhash_hamming_pairs", 9),
+    ("q274_simhash_quality_audit", 9),
     # round 9: q279's Spark-side host regex '^www\.' re-escaped for
     # Spark's SQL literal parser (ADVICE r8 — the shipped pattern
     # reached the regex engine as '^www.'; inert on this corpus, so
     # outputs are unchanged, but the registered plan text changed).
-    "q279_url_host_dedup_rollup": 9,
+    ("q279_url_host_dedup_rollup", 9),
     # round 10 (ADVICE r9): the rung=None ladder path lazily local-
     # checkpoints the fingerprint frame so the in-plan count no longer
     # re-evaluates the aggregation subtree — outputs unchanged, but
     # the registered q79/q274 plans changed shape; q286's shard-width
     # count now aggregates the pre-rank frame instead of replaying the
     # range-partition sort (values identical).
-    "q79_simhash_hamming_pairs": 10,
-    "q274_simhash_quality_audit": 10,
-    "q286_training_order_manifest": 10,
+    ("q79_simhash_hamming_pairs", 10),
+    ("q274_simhash_quality_audit", 10),
+    ("q286_training_order_manifest", 10),
     # round 11: q297's pricing body factored into the _skew_pricing_frame
     # helper shared with q306 (oracle byte-identical — asserted against
     # the r10 tree — and the plan is the same DAG, but the registered
     # builder changed), and the band-row builders gained the
     # bit_blocks=None parameter (default path identical).
-    "q297_simhash_skew_pricing": 11,
+    ("q297_simhash_skew_pricing", 11),
     # round 13 (optimization): _wj_scored consumes its candidate frame
     # ONCE (jaccard_capped rides through the shared-weight aggregate —
     # the second inline of the whole jaccard_pairs subtree is gone);
@@ -235,10 +235,10 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # persists with an eager local checkpoint (q144's registered plan
     # becomes a checkpoint scan). Oracles untouched; driver_sim green
     # at sf0.01 for all four.
-    "q273_idf_weighted_jaccard": 13,
-    "q276_weighted_dedup_agreement": 13,
-    "q254_kmv_overlap_estimates": 13,
-    "q144_ppjoin_pairs": 13,
+    ("q273_idf_weighted_jaccard", 13),
+    ("q276_weighted_dedup_agreement", 13),
+    ("q254_kmv_overlap_estimates", 13),
+    ("q144_ppjoin_pairs", 13),
     # round 13 (optimization): the gate writers' bucket append is a
     # REBALANCE instead of a fixed k-way repartition, and the replay-
     # idempotency anti-join is persisted across its emptiness probe +
@@ -246,24 +246,57 @@ _REVERIFY_QUEUE: dict[str, int] = {
     # their two independent compactions and q316 its three snapshot
     # probes from driver threads (outputs deterministic). driver_sim
     # green at sf0.01 for all 18 touched replay names.
-    "q205_streaming_dedup_gate": 13,
-    "q244_streaming_multibatch_gate": 13,
-    "q287_simhash_index_gate": 13,
-    "q292_simhash_multibatch_gate": 13,
-    "q295_index_erasure_audit": 13,
-    "q296_simhash_rung_migration": 13,
-    "q299_erasure_vacuum_compliance": 13,
-    "q301_minhash_index_erasure": 13,
-    "q302_midstream_erasure_gate": 13,
-    "q307_banding_migration_gate": 13,
-    "q308_partitioned_index_erasure": 13,
-    "q311_centered_gate_replay": 13,
-    "q312_gate_compaction_replay": 13,
-    "q313_recommended_gate_replay": 13,
-    "q315_center_threshold_drift": 13,
-    "q316_ivf_cell_split_recovery": 13,
-    "q317_bucketed_gate_compaction": 13,
-}
+    ("q205_streaming_dedup_gate", 13),
+    ("q244_streaming_multibatch_gate", 13),
+    ("q287_simhash_index_gate", 13),
+    ("q292_simhash_multibatch_gate", 13),
+    ("q295_index_erasure_audit", 13),
+    ("q296_simhash_rung_migration", 13),
+    ("q299_erasure_vacuum_compliance", 13),
+    ("q301_minhash_index_erasure", 13),
+    ("q302_midstream_erasure_gate", 13),
+    ("q307_banding_migration_gate", 13),
+    ("q308_partitioned_index_erasure", 13),
+    ("q311_centered_gate_replay", 13),
+    ("q312_gate_compaction_replay", 13),
+    ("q313_recommended_gate_replay", 13),
+    ("q315_center_threshold_drift", 13),
+    ("q316_ivf_cell_split_recovery", 13),
+    ("q317_bucketed_gate_compaction", 13),
+    # round 14: the MinHash, SimHash and recommended gate writers run
+    # one shared batch protocol (the recommended writers no longer nest
+    # a second writer per batch), and q315 runs its committing boundary
+    # writer only after its two read-only sweeps — every gate-driven
+    # query re-verifies.
+    ("q205_streaming_dedup_gate", 14),
+    ("q244_streaming_multibatch_gate", 14),
+    ("q287_simhash_index_gate", 14),
+    ("q292_simhash_multibatch_gate", 14),
+    ("q295_index_erasure_audit", 14),
+    ("q296_simhash_rung_migration", 14),
+    ("q299_erasure_vacuum_compliance", 14),
+    ("q301_minhash_index_erasure", 14),
+    ("q302_midstream_erasure_gate", 14),
+    ("q307_banding_migration_gate", 14),
+    ("q308_partitioned_index_erasure", 14),
+    ("q311_centered_gate_replay", 14),
+    ("q312_gate_compaction_replay", 14),
+    ("q313_recommended_gate_replay", 14),
+    ("q315_center_threshold_drift", 14),
+    ("q317_bucketed_gate_compaction", 14),
+)
+
+
+def _fold_events(events: tuple[tuple[str, int], ...]) -> dict[str, int]:
+    """name -> latest change round; a re-queued name keeps its first
+    position and takes the max round."""
+    queue: dict[str, int] = {}
+    for name, rnd in events:
+        queue[name] = max(queue.get(name, 0), rnd)
+    return queue
+
+
+_REVERIFY_QUEUE: dict[str, int] = _fold_events(_REVERIFY_EVENTS)
 
 
 def _active_reverify(

@@ -722,6 +722,40 @@ def simhash_rung_thresholds() -> tuple[int, int]:
     )
 
 
+def index_bucket(id_col: str, k: int) -> Column:
+    """The bucketed index layout's partition value (the ``pbucket``
+    column under the ``partition_by``/``bucket_k`` table properties):
+    ``id mod k`` as INT. Every writer of a bucketed index — the gates'
+    appends and the lifecycle rewrites — derives it here, so rows land
+    in the bucket an erasure scrub prunes to."""
+    return F.expr(f"CAST(pmod({id_col}, {int(k)}) AS INT)")
+
+
+def stored_simhash_rung(
+    meta: dict, index: DataFrame, index_path: str
+) -> int | None:
+    """The rung a stored SimHash index was banded at: the manifest's
+    ``simhash_rung`` table property (one JSON read), else — for
+    indexes committed before manifests carried ``meta`` — a min/max
+    aggregate over the rows' ``rung`` column. The fallback is
+    deterministic: a mixed-rung index is corruption and raises instead
+    of passing on whichever row came back first. ``None`` for an empty
+    legacy index (nothing to validate)."""
+    stored = meta.get("simhash_rung")
+    if stored is not None:
+        return stored
+    row = index.agg(
+        F.min("rung").alias("lo"), F.max("rung").alias("hi")
+    ).first()
+    if row["lo"] is not None and row["lo"] != row["hi"]:
+        raise ValueError(
+            f"simhash index at {index_path} holds mixed rungs "
+            f"{row['lo']}..{row['hi']} — corrupted index; rebuild or "
+            "migrate it"
+        )
+    return row["lo"]
+
+
 def _materialize_for_reuse(df: DataFrame) -> DataFrame:
     """Materialize a frame consumed by multiple plan branches, per the
     session's ``spark.movie_data_pipeline.dedup.materialize`` config:
@@ -1047,145 +1081,148 @@ def ppjoin_pairs(
     sh = doc_shingles(df, id_col, text_col, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # Materialize before the multi-leaf consumers (round 13, guide §5):
-    # sh feeds the df-rank join on both sides AND the verification
-    # arrays — cold-cache leaves race and re-shingle otherwise.
-    sh.count()
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("sh_df"))
-    per_doc = Window.partitionBy(id_col)
-    ranked = (
-        sh.join(dfreq, "shingle")
-        .select(
-            id_col,
-            "shingle",
-            F.row_number()
-            .over(per_doc.orderBy("sh_df", "shingle"))
-            .alias("pos"),
-            F.count("*").over(per_doc).alias("set_size"),
-        )
-    )
-    prefix_len = (
-        F.col("set_size")
-        - _ceil_t_times(F.col("set_size"))
-        + F.lit(1)
-    )
-    prefix = ranked.filter(F.col("pos") <= prefix_len)
-
-    # Bucket entries carry (doc, pos, set_size) so the pair generator
-    # can apply PPJoin's two LOSSLESS in-bucket prunes before anything
-    # shuffles:
-    #  - length filter: J >= t forces min(|A|,|B|) >= t * max(|A|,|B|);
-    #  - positional filter (PPJoin Lemma 1): the overlap reachable from
-    #    a common prefix token at positions (pa, pb) is at most
-    #    1 + min(|A| - pa, |B| - pb), and J >= t requires overlap
-    #    >= ceil(t/(1+t) * (|A|+|B|)).
-    # Both are arithmetic on bucket-local struct fields — evaluated in
-    # codegen during map-side pair generation, so pruned pairs never
-    # reach the distinct's exchange (the dominant cost on fat-headed
-    # shingle distributions where the prefix filter alone is weak).
-    ids = F.col("ids")
-
-    def _maybe_pair(x: Column, y: Column) -> Column:
-        alpha = _ceil_alpha(x["sz"] + y["sz"])
-        ubound = F.lit(1) + F.least(x["sz"] - x["pos"], y["sz"] - y["pos"])
-        len_ok = F.least(x["sz"], y["sz"]) >= _ceil_t_times(
-            F.greatest(x["sz"], y["sz"])
-        )
-        return F.when(
-            len_ok & (ubound >= alpha),
-            F.struct(x["doc"].alias("doc_a"), y["doc"].alias("doc_b")),
-        ).otherwise(F.lit(None))
-
-    pair_array = F.filter(
-        F.flatten(
-            F.transform(
-                ids,
-                lambda x, i: F.transform(
-                    F.slice(ids, i + 2, F.size(ids) - i - 1),
-                    lambda y: _maybe_pair(x, y),
-                ),
+    arrs = None
+    try:
+        # Materialize before the multi-leaf consumers (round 13, guide §5):
+        # sh feeds the df-rank join on both sides AND the verification
+        # arrays — cold-cache leaves race and re-shingle otherwise.
+        sh.count()
+        dfreq = sh.groupBy("shingle").agg(F.count("*").alias("sh_df"))
+        per_doc = Window.partitionBy(id_col)
+        ranked = (
+            sh.join(dfreq, "shingle")
+            .select(
+                id_col,
+                "shingle",
+                F.row_number()
+                .over(per_doc.orderBy("sh_df", "shingle"))
+                .alias("pos"),
+                F.count("*").over(per_doc).alias("set_size"),
             )
-        ),
-        lambda p: p.isNotNull(),
-    )
-    cand = (
-        prefix.groupBy("shingle")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col(id_col).alias("doc"),
-                        F.col("pos").alias("pos"),
-                        F.col("set_size").alias("sz"),
-                    )
-                )
-            ).alias("ids")
         )
-        .filter(F.size("ids") > 1)
-        .select(F.explode(pair_array).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-    )
-    # NOT distinct'd here: a pair surviving the filters appears once per
-    # shared prefix shingle (small multiplicity), and deduping now would
-    # shuffle the full candidate stream. The verify join processes the
-    # duplicates (identical rows → identical jaccard) and the final
-    # distinct runs on the thresholded survivors — orders of magnitude
-    # fewer rows than the candidate stream.
+        prefix_len = (
+            F.col("set_size")
+            - _ceil_t_times(F.col("set_size"))
+            + F.lit(1)
+        )
+        prefix = ranked.filter(F.col("pos") <= prefix_len)
 
-    arrs = (
-        sh.groupBy(id_col)
-        .agg(
-            F.sort_array(F.collect_list("shingle")).alias("arr"),
-            F.count("*").alias("sz"),
-        )
-        # both verify dims (arr_a and arr_b) consume this frame on
-        # DIFFERENT join keys, so the exchanges cannot be reused and
-        # the collect_list+sort aggregate ran twice from the cached
-        # shingle frame; cached it is built once (guide §2.4)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Materialize: the single verify action scans arrs at two leaves
-    # (doc_a and doc_b dims) — populate the cache once (round 13, §5).
-    arrs.count()
-    verified = (
-        cand.join(
-            arrs.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("arr").alias("arr_a"),
-                F.col("sz").alias("sz_a"),
+        # Bucket entries carry (doc, pos, set_size) so the pair generator
+        # can apply PPJoin's two LOSSLESS in-bucket prunes before anything
+        # shuffles:
+        #  - length filter: J >= t forces min(|A|,|B|) >= t * max(|A|,|B|);
+        #  - positional filter (PPJoin Lemma 1): the overlap reachable from
+        #    a common prefix token at positions (pa, pb) is at most
+        #    1 + min(|A| - pa, |B| - pb), and J >= t requires overlap
+        #    >= ceil(t/(1+t) * (|A|+|B|)).
+        # Both are arithmetic on bucket-local struct fields — evaluated in
+        # codegen during map-side pair generation, so pruned pairs never
+        # reach the distinct's exchange (the dominant cost on fat-headed
+        # shingle distributions where the prefix filter alone is weak).
+        ids = F.col("ids")
+
+        def _maybe_pair(x: Column, y: Column) -> Column:
+            alpha = _ceil_alpha(x["sz"] + y["sz"])
+            ubound = F.lit(1) + F.least(x["sz"] - x["pos"], y["sz"] - y["pos"])
+            len_ok = F.least(x["sz"], y["sz"]) >= _ceil_t_times(
+                F.greatest(x["sz"], y["sz"])
+            )
+            return F.when(
+                len_ok & (ubound >= alpha),
+                F.struct(x["doc"].alias("doc_a"), y["doc"].alias("doc_b")),
+            ).otherwise(F.lit(None))
+
+        pair_array = F.filter(
+            F.flatten(
+                F.transform(
+                    ids,
+                    lambda x, i: F.transform(
+                        F.slice(ids, i + 2, F.size(ids) - i - 1),
+                        lambda y: _maybe_pair(x, y),
+                    ),
+                )
             ),
-            "doc_a",
+            lambda p: p.isNotNull(),
         )
-        .join(
-            arrs.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("arr").alias("arr_b"),
-                F.col("sz").alias("sz_b"),
-            ),
-            "doc_b",
+        cand = (
+            prefix.groupBy("shingle")
+            .agg(
+                F.sort_array(
+                    F.collect_list(
+                        F.struct(
+                            F.col(id_col).alias("doc"),
+                            F.col("pos").alias("pos"),
+                            F.col("set_size").alias("sz"),
+                        )
+                    )
+                ).alias("ids")
+            )
+            .filter(F.size("ids") > 1)
+            .select(F.explode(pair_array).alias("p"))
+            .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         )
-        .withColumn("n_common", F.size(F.array_intersect("arr_a", "arr_b")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
+        # NOT distinct'd here: a pair surviving the filters appears once per
+        # shared prefix shingle (small multiplicity), and deduping now would
+        # shuffle the full candidate stream. The verify join processes the
+        # duplicates (identical rows → identical jaccard) and the final
+        # distinct runs on the thresholded survivors — orders of magnitude
+        # fewer rows than the candidate stream.
+
+        arrs = (
+            sh.groupBy(id_col)
+            .agg(
+                F.sort_array(F.collect_list("shingle")).alias("arr"),
+                F.count("*").alias("sz"),
+            )
+            # both verify dims (arr_a and arr_b) consume this frame on
+            # DIFFERENT join keys, so the exchanges cannot be reused and
+            # the collect_list+sort aggregate ran twice from the cached
+            # shingle frame; cached it is built once (guide §2.4)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
-    # Bound the caches' lifetime (§5 hygiene, VERDICT r12 #10): the
-    # thresholded survivor set is orders of magnitude smaller than the
-    # candidate stream, so materialize it eagerly (executor-local
-    # checkpoint — nothing moves through the driver) and release the
-    # shingle + verification-array persists; a long-lived session no
-    # longer accumulates MEMORY_AND_DISK blocks per call.
-    out = (
-        verified.select("doc_a", "doc_b", "jaccard")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    arrs.unpersist()
-    sh.unpersist()
-    return out
+        # Materialize: the single verify action scans arrs at two leaves
+        # (doc_a and doc_b dims) — populate the cache once (round 13, §5).
+        arrs.count()
+        verified = (
+            cand.join(
+                arrs.select(
+                    F.col(id_col).alias("doc_a"),
+                    F.col("arr").alias("arr_a"),
+                    F.col("sz").alias("sz_a"),
+                ),
+                "doc_a",
+            )
+            .join(
+                arrs.select(
+                    F.col(id_col).alias("doc_b"),
+                    F.col("arr").alias("arr_b"),
+                    F.col("sz").alias("sz_b"),
+                ),
+                "doc_b",
+            )
+            .withColumn("n_common", F.size(F.array_intersect("arr_a", "arr_b")))
+            .withColumn(
+                "jaccard",
+                F.col("n_common")
+                / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
+            )
+            .filter(F.col("jaccard") >= F.lit(threshold))
+        )
+        # Bound the caches' lifetime (§5 hygiene, VERDICT r12 #10): the
+        # thresholded survivor set is orders of magnitude smaller than the
+        # candidate stream, so materialize it eagerly (executor-local
+        # checkpoint — nothing moves through the driver) and release the
+        # shingle + verification-array persists; a long-lived session no
+        # longer accumulates MEMORY_AND_DISK blocks per call.
+        return (
+            verified.select("doc_a", "doc_b", "jaccard")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        if arrs is not None:
+            arrs.unpersist()
+        sh.unpersist()
 
 
 def containment_pairs(

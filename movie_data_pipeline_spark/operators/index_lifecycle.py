@@ -264,7 +264,11 @@ def migrate_simhash_index(
     — a silent full rewrite hides configuration bugs) or when
     ``new_rung`` is not a ladder rung.
     """
-    from movie_data_pipeline_spark.operators.dedup import simhash_band_rows
+    from movie_data_pipeline_spark.operators.dedup import (
+        index_bucket,
+        simhash_band_rows,
+        stored_simhash_rung,
+    )
 
     if new_rung not in (1, 2, 3):
         raise ValueError(f"new_rung must be 1, 2 or 3, got {new_rung}")
@@ -280,20 +284,7 @@ def migrate_simhash_index(
         target_blocks = (
             None if bit_blocks is None else [int(b) for b in bit_blocks]
         )
-    stored = meta.get("simhash_rung")
-    if stored is None:
-        # Legacy fallback (pre-meta indexes): min/max aggregate — a
-        # mixed-rung index is corruption and must fail deterministically
-        # (ADVICE r10), never pass on whichever row came back first.
-        row = head.agg(
-            F.min("rung").alias("lo"), F.max("rung").alias("hi")
-        ).first()
-        if row["lo"] is not None and row["lo"] != row["hi"]:
-            raise ValueError(
-                f"simhash index at {index_path} holds mixed rungs "
-                f"{row['lo']}..{row['hi']} — corrupted index"
-            )
-        stored = row["lo"]
+    stored = stored_simhash_rung(meta, head, index_path)
     if stored == new_rung and target_blocks == stored_blocks:
         raise ValueError(
             f"simhash index at {index_path} is already at rung "
@@ -323,8 +314,7 @@ def migrate_simhash_index(
         # and lack the partition column — re-derive it so the bucketed
         # layout (and its pruned scrubs) survives the migration.
         rebanded = rebanded.withColumn(
-            "pbucket",
-            F.expr(f"CAST(pmod({id_col}, {int(bucket_k)}) AS INT)"),
+            "pbucket", index_bucket(id_col, bucket_k)
         )
     return index.commit(rebanded, mode="overwrite", meta=merged)
 
@@ -653,6 +643,7 @@ def recenter_simhash_index(
     linear, no driver-side data.
     """
     from movie_data_pipeline_spark.operators.dedup import (
+        index_bucket,
         measure_balanced_bit_blocks,
         measure_center_thresholds,
         simhash_band_rows,
@@ -697,8 +688,7 @@ def recenter_simhash_index(
     bucket_k = meta.get("bucket_k")
     if bucket_k is not None:
         rebanded = rebanded.withColumn(
-            "pbucket",
-            F.expr(f"CAST(pmod({id_col}, {int(bucket_k)}) AS INT)"),
+            "pbucket", index_bucket(id_col, bucket_k)
         )
     meta.update(
         {

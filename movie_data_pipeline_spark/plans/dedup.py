@@ -4964,12 +4964,12 @@ def q315_center_threshold_drift(
         assert meta2["bucket_k"] == 8 and meta2["simhash_rung"] == 1
         assert sorted(meta2["simhash_bit_blocks"]) == list(range(60))
 
-        # The three post-recenter checks are independent READ-ONLY
-        # sweeps over the committed v1 state (the boundary writer
-        # rejects every shifted-id duplicate, so it commits nothing) —
-        # submit them from driver threads so each one's straggler tail
-        # back-fills the others (guide §2.6, the q288/q316 pattern;
-        # deterministic — threads only overlap job submission).
+        # The audit and equality checks are independent READ-ONLY
+        # sweeps over the committed v1 state — submit them from driver
+        # threads so each one's straggler tail back-fills the other
+        # (guide §2.6, the q288/q316 pattern; deterministic — threads
+        # only overlap job submission). The boundary writer may commit
+        # to the same index, so it runs only after both reads return.
         def _after_audit() -> DataFrame:
             a = audit_center_thresholds(
                 spark, index_path, corpus_path
@@ -5026,13 +5026,12 @@ def q315_center_threshold_drift(
 
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        with ThreadPoolExecutor(max_workers=2) as pool:
             f_after = pool.submit(_after_audit)
             f_eq = pool.submit(_equality)
-            f_bd = pool.submit(_boundary)
             after = f_after.result()
             f_eq.result()
-            f_bd.result()
+        _boundary()
 
         result = (
             before.withColumn("phase", F.lit("before"))

@@ -1,40 +1,108 @@
-"""Streaming sinks beyond the built-ins: incremental upsert into a
-parquet key-value table via ``foreachBatch``.
+"""Streaming sinks beyond the built-ins: ``foreachBatch`` writers for a
+keyed upsert table, versioned appends, a drift log, and the near-
+duplicate ingest gate.
 
-Structured Streaming's file sink is append-only; maintaining a *keyed*
-table (latest aggregate per key, latest row per entity) needs MERGE.
-On a lakehouse that is Delta/Iceberg ``MERGE INTO`` inside
-``foreachBatch``; without a table format the same row semantics come
-from :func:`operators.merge.upsert` — each micro-batch's rows replace
-key-matched rows and insert the rest.
+Upsert sink. Structured Streaming's file sink is append-only;
+maintaining a *keyed* table (latest row per key) needs MERGE. Without
+a table format the row semantics come from :func:`operators.merge.
+upsert`: each micro-batch's rows replace key-matched rows and insert
+the rest. ``foreachBatch`` is at-least-once and the upsert idempotent
+per (key, value), so replays converge. The merged frame is
+materialized (``localCheckpoint``) BEFORE the overwrite — the plan
+reads the files the write replaces, and overwriting a lazily-read
+input is the classic self-overwrite corruption. At scale the table is
+partitioned and overwritten per touched partition (operators/merge.py).
 
-Scale/consistency notes:
+Ingest gate. The continuous-crawl front door of an LLM data pipeline:
+every micro-batch of ``(doc_id, text, ...)`` documents is fingerprinted,
+checked against a stored band index of the accepted corpus, and only
+novel documents are committed; the index grows by exactly the accepted
+documents' band rows. Two fingerprint families share one protocol
+(:func:`_gate_writer`) and differ only in how they sign a batch, band
+it, pair it, join it to the index, and what they pin in the index
+manifest: MinHash (:func:`dedup_gate_batch_writer`) and 60-bit SimHash
+(:func:`simhash_gate_batch_writer`). Per batch, each step once:
 
-- ``foreachBatch`` gives at-least-once batch delivery; the upsert is
-  idempotent per (key, value) so replays converge — the standard
-  recipe for exactly-once *effects* on a keyed sink.
-- The merged frame is materialized (``localCheckpoint``) BEFORE the
-  overwrite: the plan reads the same files the write replaces, and
-  overwriting a lazily-read input is the classic self-overwrite
-  corruption. A table format does this with snapshot isolation; a real
-  deployment at 100 TB should also partition the table and use
-  dynamic-partition overwrite so each batch rewrites only touched
-  partitions (see operators/merge.py).
-- With an update-mode aggregation upstream, each batch carries only
-  keys whose aggregate changed — the write is proportional to churn,
-  not table size (modulo the no-format full-file rewrite above).
+1. an emptiness probe (an empty batch commits nothing);
+2. one read of the index head (version + manifest ``meta``); the
+   batch's family is resolved from it and the ``bucket_k`` partition
+   layout checked against it;
+3. the fingerprint frame is persisted and counted;
+4. within-batch keep-first: of every colliding pair the higher doc_id
+   is dropped (greedy min-representative — deterministic, and
+   transitively safe because the kept minimum is itself checked
+   against the corpus);
+5. corpus check: the family validates the parameters it pinned in
+   ``meta``, then the batch's band rows ⋈ the stored index are
+   anti-joined out of the survivors (the corpus is never re-
+   fingerprinted);
+6. the survivors are persisted and counted (zero → no commit);
+7. replay anti-join against the accepted table's ``doc_id`` column;
+8. docs-first commit: new documents append to ``accepted_path``, THEN
+   the survivors' band rows append to ``index_path`` (bucketed by
+   ``id mod bucket_k`` when the index is partitioned), with the
+   family's manifest properties.
+
+Commit ordering is documents-first: a crash between the two commits
+can leave accepted docs unindexed (a later duplicate may slip through
+— benign, dedup is best-effort at at-least-once delivery), never the
+reverse (index-first would permanently reject content that was never
+stored). Both commits are snapshot-isolated appends on
+:class:`VersionedTable`. Replay idempotency does not rely on the index
+alone: after such a crash the replayed batch finds the index
+unchanged, so step 7 keeps already-landed documents from appending
+twice, and the replay's index commit back-fills their band rows.
+
+The ``recommended_*`` writers resolve the family from the index
+manifest (or measure it on a fresh index) inside that same one head
+read, then run the same protocol.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
+from movie_data_pipeline_spark.operators.dedup import (
+    band_signatures,
+    index_bucket,
+    lsh_candidate_pairs_wide,
+    measure_balanced_bit_blocks,
+    measure_center_thresholds,
+    minhash_signatures_wide,
+    simhash,
+    simhash_band_rows,
+    simhash_centered_pinned,
+    simhash_hamming_pairs,
+    stored_simhash_rung,
+)
 from movie_data_pipeline_spark.operators.merge import upsert
+from movie_data_pipeline_spark.sources.versioned import VersionedTable
+
+RECOMMENDED_INDEX_BUCKET_K = 64
+
+
+def _start(
+    df: DataFrame,
+    writer: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    trigger_available_now: bool = True,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """Run ``writer`` as the stream's foreachBatch sink."""
+    stream = (
+        df.writeStream.foreachBatch(writer)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+    )
+    if trigger_available_now:
+        stream = stream.trigger(availableNow=True)
+    return stream.start()
 
 
 def upsert_batch_writer(
@@ -70,12 +138,9 @@ def start_upsert_stream(
 ) -> StreamingQuery:
     """Continuously maintain a keyed parquet table from a streaming
     update-mode DataFrame (e.g. a watermarked aggregation)."""
-    return (
-        updates.writeStream.foreachBatch(upsert_batch_writer(path, keys))
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        updates, upsert_batch_writer(path, keys), checkpoint,
+        output_mode="update",
     )
 
 
@@ -96,7 +161,6 @@ def versioned_append_writer(
     query fails fast rather than silently dropping a batch; restart
     resumes from the checkpoint and retries on the new head.
     """
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -113,134 +177,204 @@ def start_versioned_append_stream(
     trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Stream → versioned table: each micro-batch is one append commit."""
-    writer = (
-        df.writeStream.foreachBatch(versioned_append_writer(table_path))
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        df, versioned_append_writer(table_path), checkpoint,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def dedup_gate_batch_writer(
+@dataclass(frozen=True)
+class _MinHash:
+    """16-hash MinHash signatures; index rows ``(doc_id, band,
+    band_sig)``, corpus check = the (band, band_sig) equi-join of
+    ``operators.dedup.incremental_lsh_matches``. No pinned parameters
+    beyond the bucket layout."""
+
+    bucket_k: int | None
+
+    def validate(self, meta: dict, index: DataFrame, path: str) -> None:
+        pass
+
+    def sign(self, docs: DataFrame) -> DataFrame:
+        return minhash_signatures_wide(docs)
+
+    def bands(self, sigs: DataFrame) -> DataFrame:
+        return band_signatures(sigs)
+
+    def batch_pairs(self, sigs: DataFrame) -> DataFrame:
+        return lsh_candidate_pairs_wide(sigs)
+
+    def corpus_hits(self, bands: DataFrame, index: DataFrame) -> DataFrame:
+        stored = index.select("band", "band_sig")
+        return bands.join(stored, ["band", "band_sig"])
+
+    def meta(self) -> dict:
+        return {}
+
+
+@dataclass(frozen=True)
+class _SimHash:
+    """60-bit SimHash fingerprints (one BIGINT per doc); index rows
+    ``(doc_id, simhash, band_idx, band_val, rung)``. Banding only
+    generates candidates: pairs and corpus hits are verified by exact
+    XOR-popcount ≤ ``max_hamming`` against the original fingerprints
+    (permutation-invariant, so ``bit_blocks`` moves only the band-
+    collision floor). ``thresholds`` set = the centered operator family
+    with pinned per-bit thresholds; None = zero threshold."""
+
+    rung: int
+    max_hamming: int
+    bit_blocks: list[int] | None
+    bucket_k: int | None
+    thresholds: dict | None
+
+    def validate(self, meta: dict, index: DataFrame, path: str) -> None:
+        # Band rows written under a different rung or bit assignment
+        # never join this writer's batches — duplicates of indexed docs
+        # would silently pass — so a mismatch fails loudly instead.
+        stored = stored_simhash_rung(meta, index, path)
+        if stored is not None and stored != self.rung:
+            raise ValueError(
+                f"simhash gate: index at {path} was built at rung "
+                f"{stored} but this writer is pinned to rung {self.rung}; "
+                "migrate the index (re-band its stored fingerprints — "
+                "operators/index_lifecycle.migrate_simhash_index) or pin "
+                "the matching rung"
+            )
+        if "simhash_rung" not in meta:
+            return  # a pre-meta index predates permuted and centered builds
+        if meta.get("simhash_bit_blocks") != self.bit_blocks:
+            raise ValueError(
+                f"simhash gate: index at {path} was banded under bit "
+                f"assignment {meta.get('simhash_bit_blocks')} but this "
+                f"writer is pinned to {self.bit_blocks}; migrate the index "
+                "(operators/index_lifecycle.migrate_simhash_index with "
+                "bit_blocks) or pin the matching assignment"
+            )
+        spaces = ("zero-threshold", "centered")
+        stored_centered = "simhash_center_s" in meta
+        if stored_centered != (self.thresholds is not None):
+            raise ValueError(
+                f"simhash gate: index at {path} holds "
+                f"{spaces[stored_centered]} fingerprints but this writer "
+                f"is {spaces[self.thresholds is not None]}; the two "
+                "fingerprint spaces never match — rebuild the index or "
+                "match the writer"
+            )
+
+    def sign(self, docs: DataFrame) -> DataFrame:
+        if self.thresholds is None:
+            return simhash(docs)
+        return simhash_centered_pinned(docs, self.thresholds)
+
+    def bands(self, fp: DataFrame) -> DataFrame:
+        return simhash_band_rows(
+            fp, rung=self.rung, bit_blocks=self.bit_blocks
+        ).withColumn("rung", F.lit(int(self.rung)))
+
+    def batch_pairs(self, fp: DataFrame) -> DataFrame:
+        return simhash_hamming_pairs(
+            fp, max_hamming=self.max_hamming, rung=self.rung,
+            bit_blocks=self.bit_blocks,
+        )
+
+    def corpus_hits(self, bands: DataFrame, index: DataFrame) -> DataFrame:
+        stored = index.select(
+            "band_idx", "band_val", F.col("simhash").alias("idx_simhash")
+        )
+        return bands.join(stored, ["band_idx", "band_val"]).filter(
+            F.expr(
+                "CAST(bit_count(simhash ^ idx_simhash) AS BIGINT)"
+                f" <= {int(self.max_hamming)}"
+            )
+        )
+
+    def meta(self) -> dict:
+        out = {
+            "simhash_rung": int(self.rung),
+            "simhash_bit_blocks": self.bit_blocks,
+        }
+        if self.thresholds is not None:
+            out["simhash_center_s"] = [int(x) for x in self.thresholds["s"]]
+            out["simhash_center_n"] = int(self.thresholds["n"])
+        return out
+
+
+def _pinned_thresholds(meta: dict) -> dict | None:
+    """The centered thresholds an index pinned, None if it has none."""
+    if "simhash_center_s" not in meta:
+        return None
+    return {"s": meta["simhash_center_s"], "n": meta["simhash_center_n"]}
+
+
+def _gate_writer(
     accepted_path: str,
     index_path: str,
-    index_bucket_k: int | None = None,
+    resolve: Callable[[DataFrame, dict | None], _MinHash | _SimHash],
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch writer implementing a streaming NEAR-DUPLICATE
-    INGEST GATE — the continuous-crawl front door of an LLM data
-    pipeline: every micro-batch of documents is MinHash-signed, checked
-    against the accumulated corpus LSH index, and only novel documents
-    are committed; the index grows by exactly the accepted documents'
-    band signatures.
-
-    Per batch (all relational — one signing pass over the batch, one
-    (band, band_sig) equi-join against the stored index; the corpus is
-    never re-signed):
-
-    1. ``minhash_signatures_wide`` over the batch (16 hashes, one pass);
-    2. within-batch keep-first: ``lsh_candidate_pairs_wide`` pairs drop
-       the higher doc_id of each colliding pair (greedy min-
-       representative — deterministic, and transitively safe because
-       the kept minimum itself is checked against the corpus);
-    3. corpus check: batch band signatures ⋈ index on (band, band_sig)
-       — the same storable-index join as
-       ``operators.dedup.incremental_lsh_matches``;
-    4. survivors are committed append-mode to ``accepted_path``, then
-       their band signatures to ``index_path``.
-
-    Commit ordering is documents-first: a crash between the two commits
-    can leave accepted docs unindexed (a later duplicate may slip
-    through — benign, dedup is best-effort by construction at
-    at-least-once semantics), never the reverse (index-first would
-    permanently reject content that was never stored). Both commits are
-    snapshot-isolated appends on :class:`VersionedTable`. Replay
-    idempotency does NOT rely on the index alone: a crash between the
-    accepted-docs commit and the index commit followed by an
-    at-least-once replay would find the index unchanged, so survivors
-    are additionally anti-joined against the accepted table's existing
-    ``doc_id`` set before committing — already-landed documents are
-    never appended twice, and the replay's index commit back-fills the
-    missing band signatures. (The accepted-side check reads only the
-    ``doc_id`` column — column-pruned at the parquet scan; at corpus
-    scale the same check is a bloom-filter or key-manifest lookup.)
-    """
-    from movie_data_pipeline_spark.operators.dedup import (
-        band_signatures,
-        lsh_candidate_pairs_wide,
-        minhash_signatures_wide,
-    )
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
+    """The ingest-gate protocol (module docstring), once for every
+    family. ``resolve(batch, meta)`` picks the batch's family from the
+    index head's manifest ``meta`` (None on a fresh index); the family
+    validates the rest of that meta."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        sigs = minhash_signatures_wide(batch_df)
-        sigs.persist()
+        index = VersionedTable(index_path)
+        head = index.current_version()
+        meta = None
+        if head is not None:
+            meta = index.manifest(head).get("meta") or {}
+        family = resolve(batch_df, meta)
+        if meta is not None and meta.get("bucket_k") != family.bucket_k:
+            raise ValueError(
+                f"gate: index at {index_path} uses bucket layout "
+                f"k={meta.get('bucket_k')} but this writer is pinned to "
+                f"k={family.bucket_k}; appending under a different layout "
+                "would tear the partitioned table"
+            )
+
+        fp = family.sign(batch_df).persist()
         try:
-            # Materialize the signature cache BEFORE the multi-leaf
-            # consumers (round 13): the within-batch pair self-join and
-            # the corpus check scan sigs at several plan leaves inside
-            # one job — on a cold cache those leaves race and each
-            # recomputes the signing subtree (guide §5). One cheap
-            # count populates the cache once.
-            sigs.count()
-            bands = band_signatures(sigs)
+            # Materialize the fingerprint cache BEFORE the multi-leaf
+            # consumers: the within-batch pair self-join and the corpus
+            # check scan fp at several plan leaves inside one job — on
+            # a cold cache those leaves race and each recomputes the
+            # signing subtree (measured 2-3x the batch cost at sf0.1).
+            fp.count()
+            bands = family.bands(fp)
             batch_dupes = (
-                lsh_candidate_pairs_wide(sigs)
+                family.batch_pairs(fp)
                 .select(F.col("doc_b").alias("doc_id"))
                 .distinct()
             )
             survivors = batch_df.join(batch_dupes, "doc_id", "left_anti")
-
-            index = VersionedTable(index_path)
-            if index.current_version() is not None:
-                stored_k = (index.manifest().get("meta") or {}).get(
-                    "bucket_k"
+            if meta is not None:
+                stored = index.read(spark, head)
+                family.validate(meta, stored, index_path)
+                hits = family.corpus_hits(bands, stored).select("doc_id")
+                survivors = survivors.join(
+                    hits.distinct(), "doc_id", "left_anti"
                 )
-                if stored_k != index_bucket_k:
-                    raise ValueError(
-                        f"dedup gate: index at {index_path} uses bucket "
-                        f"layout k={stored_k} but this writer is pinned "
-                        f"to k={index_bucket_k}; appending under a "
-                        "different layout would tear the partitioned "
-                        "table"
-                    )
-                corpus_bands = index.read(spark).select("band", "band_sig")
-                corpus_hits = (
-                    bands.join(corpus_bands, ["band", "band_sig"])
-                    .select("doc_id")
-                    .distinct()
-                )
-                survivors = survivors.join(corpus_hits, "doc_id", "left_anti")
-
             survivors = survivors.persist()
             try:
-                # count() instead of isEmpty(): the emptiness guard is
-                # needed either way (an all-duplicate batch must not
-                # commit), and a full count materializes the survivors
-                # cache completely, so the accepted anti-join, the
-                # docs commit, and the index semi-join below read
-                # blocks instead of recomputing the partitions the
-                # early-exit probe never touched (round 13, guide §5).
+                # count() instead of isEmpty(): the guard is needed
+                # either way, and a full count fills the survivors
+                # cache, so the replay anti-join, the docs commit and
+                # the index semi-join read blocks instead of recomputing
+                # the partitions an early-exit probe never touched.
                 if survivors.count() == 0:
                     return
-                # Replay idempotency: docs that already landed in the
-                # accepted table (crash before the index commit, then
-                # at-least-once replay) must not append twice — but
-                # their band signatures still need the index back-fill.
                 accepted = VersionedTable(accepted_path)
                 new_docs = survivors
                 if accepted.current_version() is not None:
-                    # Persisted across the emptiness probe + commit
-                    # (round 13): the anti-join re-reads the accepted
-                    # table's doc_id column, and without a cache the
-                    # isEmpty probe and the commit write each ran it.
-                    landed_ids = accepted.read(spark).select("doc_id")
+                    # Persisted across the emptiness probe + commit,
+                    # which would otherwise each re-read the accepted
+                    # doc_id column.
+                    landed = accepted.read(spark).select("doc_id")
                     new_docs = survivors.join(
-                        landed_ids, "doc_id", "left_anti"
+                        landed, "doc_id", "left_anti"
                     ).persist()
                 try:
                     if not new_docs.isEmpty():
@@ -248,43 +382,53 @@ def dedup_gate_batch_writer(
                 finally:
                     if new_docs is not survivors:
                         new_docs.unpersist()
-                idx_rows = bands.join(
+                rows = bands.join(
                     survivors.select("doc_id"), "doc_id", "left_semi"
                 )
-                idx_meta = None
-                if index_bucket_k is not None:
-                    # Bucketed index layout (round 11): see the SimHash
-                    # gate — erasure scrubs prune to touched buckets.
-                    # Bucket-keyed REBALANCE before the write (round
-                    # 13; was a fixed repartition(k) in round 12):
-                    # without clustering every task writes a file into
-                    # every bucket it touches (tasks x k tiny files PER
-                    # BATCH); a fixed k-way exchange fixed that but
-                    # cost k near-empty reduce tasks per micro-batch at
-                    # small scale. REBALANCE keeps the one-file-per-
-                    # bucket clustering (hash routing is by pbucket
-                    # alone) while AQE coalesces the tiny batch to few
-                    # tasks and, at 100 TB, splits an oversized bucket
-                    # into advisory-sized files (guide §6) — the
-                    # scale-adaptive width a constant can't give.
-                    idx_rows = idx_rows.withColumn(
-                        "pbucket",
-                        F.expr(
-                            f"CAST(pmod(doc_id, {int(index_bucket_k)})"
-                            " AS INT)"
-                        ),
+                idx_meta = family.meta()
+                if family.bucket_k is not None:
+                    # Bucket-keyed REBALANCE: one file per bucket per
+                    # append (unclustered, every task writes a file into
+                    # every bucket it touches), while AQE sizes the
+                    # exchange — a tiny batch coalesces to few tasks
+                    # instead of k near-empty ones, and an oversized
+                    # bucket splits into advisory-sized files at scale.
+                    rows = rows.withColumn(
+                        "pbucket", index_bucket("doc_id", family.bucket_k)
                     ).hint("rebalance", "pbucket")
-                    idx_meta = {
-                        "partition_by": "pbucket",
-                        "bucket_k": int(index_bucket_k),
-                    }
-                index.commit(idx_rows, mode="append", meta=idx_meta)
+                    idx_meta["partition_by"] = "pbucket"
+                    idx_meta["bucket_k"] = int(family.bucket_k)
+                # meta=None inherits the head's properties (MinHash,
+                # unbucketed); a dict pins the family's layout.
+                index.commit(rows, mode="append", meta=idx_meta or None)
             finally:
                 survivors.unpersist()
         finally:
-            sigs.unpersist()
+            fp.unpersist()
 
     return _apply
+
+
+def dedup_gate_batch_writer(
+    accepted_path: str,
+    index_path: str,
+    index_bucket_k: int | None = None,
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch writer for the MinHash ingest gate (protocol in the
+    module docstring): ``minhash_signatures_wide`` signs the batch (16
+    hashes, one pass), ``lsh_candidate_pairs_wide`` gives the within-
+    batch pairs, and the batch's band signatures ⋈ the stored index on
+    (band, band_sig) is the corpus check. The replay check reads only
+    the accepted table's ``doc_id`` column (column-pruned at the
+    parquet scan; at corpus scale it is a bloom-filter or key-manifest
+    lookup).
+
+    ``index_bucket_k`` writes the index Hive-partitioned by
+    ``doc_id mod k`` so erasure scrubs prune to touched buckets; it is
+    pinned in the manifest and a writer with another layout raises.
+    """
+    family = _MinHash(index_bucket_k)
+    return _gate_writer(accepted_path, index_path, lambda b, m: family)
 
 
 def start_dedup_gate_stream(
@@ -296,18 +440,10 @@ def start_dedup_gate_stream(
     trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Document stream → near-dup-gated versioned corpus + LSH index."""
-    writer = (
-        docs.writeStream.foreachBatch(
-            dedup_gate_batch_writer(
-                accepted_path, index_path, index_bucket_k=index_bucket_k
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    writer = dedup_gate_batch_writer(
+        accepted_path, index_path, index_bucket_k=index_bucket_k
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, writer, checkpoint, trigger_available_now)
 
 
 def mix_drift_batch_writer(
@@ -369,16 +505,10 @@ def start_mix_drift_stream(
     trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Event stream → per-micro-batch chi-square drift log."""
-    writer = (
-        events.writeStream.foreachBatch(
-            mix_drift_batch_writer(baseline, out_path)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        events, mix_drift_batch_writer(baseline, out_path), checkpoint,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def simhash_gate_batch_writer(
@@ -390,319 +520,68 @@ def simhash_gate_batch_writer(
     index_bucket_k: int | None = None,
     centered: bool = False,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch writer: streaming near-dup ingest gate over the
-    60-bit SimHash family (round 9, VERDICT r8 #4) — the q205 MinHash
-    gate's contract re-run on the OTHER fingerprint index: 1 BIGINT
-    per doc instead of a 16-hash signature, with exact Hamming
-    verification at the index join.
+    """foreachBatch writer for the SimHash ingest gate (protocol in the
+    module docstring) — the MinHash gate's contract on the 60-bit
+    fingerprint index: 1 BIGINT per doc instead of a 16-hash signature.
+    Within-batch pairs are ``simhash_hamming_pairs`` at the pinned
+    ``rung`` (Hamming ≤ ``max_hamming``); the corpus check is the
+    batch's band rows ⋈ the index on (band_idx, band_val), then exact
+    XOR-popcount ≤ ``max_hamming`` against the indexed fingerprint.
 
-    Per batch (one fingerprint pass over the batch, one
-    (band_idx, band_val) equi-join against the stored index; the
-    corpus is never re-fingerprinted):
+    Every family parameter is an INDEX-BUILD parameter, pinned in the
+    manifest by each commit and validated against it on every batch
+    (one JSON read, no index scan); a restarted writer that disagrees
+    raises instead of silently accepting duplicates:
 
-    1. ``simhash`` over the batch (one 60-bit fingerprint per doc);
-    2. within-batch keep-first: ``simhash_hamming_pairs`` at the
-       pinned ``rung`` — drop the higher doc_id of each Hamming <=
-       ``max_hamming`` pair (greedy min-representative, same
-       transitive-safety argument as the MinHash gate);
-    3. corpus check: the batch's band rows ⋈ stored index rows on
-       (band_idx, band_val), then exact XOR-popcount <= ``max_hamming``
-       against the indexed fingerprint — banding only generates
-       candidates, the verify bar is exact;
-    4. survivors commit docs-first, then their (doc_id, simhash,
-       band_idx, band_val, rung) rows into the index.
-
-    ``rung`` is an INDEX-BUILD parameter, pinned for the life of the
-    index: band rows created under different rungs never join (band_idx
-    is globally unique per rung — operators/dedup.simhash_band_combos),
-    so re-banding each batch by its own size would silently stop
-    matching the stored index. The rung is therefore PERSISTED — in the
-    manifest's table properties (``meta.simhash_rung``) and in every
-    index row — and validated on every batch from the manifest (one
-    JSON read, no index scan): a writer restarted with the wrong rung
-    raises instead of silently accepting duplicates. Size the rung for
-    the TARGET corpus (rung 3 carries ~10^9 docs at ~8
-    collisions/band), and migrate an index by re-banding its stored
-    fingerprints (:func:`operators.index_lifecycle.
-    migrate_simhash_index`) — a map-only rewrite, no text re-hash.
-
-    Crash/replay discipline is the MinHash gate's verbatim: commits
-    are docs-first (a crash between commits may let a later duplicate
-    through — benign under at-least-once — never permanently rejects
-    unstored content); replays anti-join survivors against the
-    accepted table's doc_ids so nothing lands twice, and the replay's
-    index commit back-fills missing band rows.
-
-    ``centered`` (round 11, VERDICT r10 #1): fingerprint with the
-    CENTERED operator family instead of the zero threshold — on the
-    FIRST batch the per-bit thresholds are measured from that batch
-    (operators/dedup.measure_center_thresholds) and pinned in the
-    manifest (``simhash_center_s``/``simhash_center_n``); every later
-    batch fingerprints against the PINNED thresholds
-    (simhash_centered_pinned), so all fingerprints live in one
-    consistent space (re-measuring per batch would fork it — the rung
-    failure mode again). A centered writer on an uncentered index, or
-    vice versa, fails the manifest validation loudly. The centered
-    space keeps the band floor near uniform on template corpora
-    (q305/q306: skew_inflation ~1x vs 404x), at the cost that the
-    thresholds are corpus statistics frozen at build — re-center by
-    re-fingerprinting (a text re-hash), or rescue an existing
-    zero-threshold index map-only with ``bit_blocks``.
-
-    ``bit_blocks`` (round 11, VERDICT r10 #1): the entropy-balanced
-    banding permutation (operators/dedup.balanced_bit_blocks) under
-    which the index's band rows were built. Like the rung it is an
-    INDEX-BUILD parameter — band values from different assignments
-    never join meaningfully — so it is persisted in the manifest
-    (``meta.simhash_bit_blocks``) and validated per batch with the
-    same one-JSON-read discipline; a writer restarted with a different
-    assignment fails loudly. Exact Hamming verification uses the
-    ORIGINAL fingerprints (permutation-invariant), so the accept/
-    reject bar is unchanged — only the band-collision floor drops.
+    - ``rung`` (``meta.simhash_rung``, also a column of every row):
+      band rows from different rungs never join (band_idx is globally
+      unique per rung — operators/dedup.simhash_band_combos), so
+      banding each batch by its own size would stop matching the
+      index. Size it for the TARGET corpus (rung 3 carries ~10^9 docs
+      at ~8 collisions/band); migrate with :func:`operators.
+      index_lifecycle.migrate_simhash_index` (map-only re-band). An
+      index committed before manifests carried ``meta`` is validated
+      by a min/max over its rung column instead.
+    - ``bit_blocks`` (``meta.simhash_bit_blocks``): the entropy-
+      balanced banding permutation (operators/dedup.
+      balanced_bit_blocks) the band rows were built under.
+    - ``centered`` (``meta.simhash_center_s/n``): fingerprint with the
+      CENTERED family. The first batch of a fresh index measures the
+      per-bit thresholds (operators/dedup.measure_center_thresholds)
+      and the first commit pins them; every later batch fingerprints
+      against the pinned thresholds, so all fingerprints share one
+      space (re-measuring per batch would fork it). Centering keeps the
+      band floor near uniform on template corpora (q305/q306: skew
+      inflation ~1x vs 404x) at the cost that the thresholds are frozen
+      corpus statistics — re-center by re-fingerprinting, or rescue a
+      zero-threshold index map-only with ``bit_blocks``.
+    - ``index_bucket_k``: the bucketed partition layout, as in
+      :func:`dedup_gate_batch_writer`.
     """
-    from movie_data_pipeline_spark.operators.dedup import (
-        measure_center_thresholds,
-        simhash,
-        simhash_band_rows,
-        simhash_centered_pinned,
-        simhash_hamming_pairs,
-    )
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
+    blocks = None if bit_blocks is None else [int(b) for b in bit_blocks]
 
-    blocks_meta = None if bit_blocks is None else [int(b) for b in bit_blocks]
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def resolve(batch_df: DataFrame, meta: dict | None) -> _SimHash:
         thresholds = None
         if centered:
-            idx0 = VersionedTable(index_path)
-            stored_meta = (
-                idx0.manifest().get("meta") or {}
-                if idx0.current_version() is not None
-                else {}
-            )
-            if "simhash_center_s" in stored_meta:
-                thresholds = {
-                    "s": stored_meta["simhash_center_s"],
-                    "n": stored_meta["simhash_center_n"],
-                }
-            elif idx0.current_version() is not None:
-                # A committed index with no pinned thresholds was NOT
-                # built centered (legacy/pre-meta, or zero-threshold).
-                # Re-measuring from this batch would fingerprint each
-                # batch in its own space — duplicates of indexed docs
-                # silently pass, the exact fork the thresholds exist to
-                # prevent (ADVICE r11). Fail loudly: rebuild required.
+            if meta is None:  # index build: measured once, pinned by the commit
+                thresholds = measure_center_thresholds(batch_df)
+            else:
+                thresholds = _pinned_thresholds(meta)
+            if thresholds is None:
+                # Re-measuring here would fingerprint each batch in its
+                # own space — duplicates of indexed docs would pass.
                 raise ValueError(
                     f"simhash gate: index at {index_path} has committed "
                     "versions but no pinned centered thresholds "
                     "(simhash_center_s) — it was not built centered and "
-                    "the two fingerprint spaces never match; rebuild "
-                    "the index centered or run this writer with "
-                    "centered=False"
+                    "the two fingerprint spaces never match; rebuild the "
+                    "index centered or run this writer with centered=False"
                 )
-            else:
-                # index build: measure once, pinned by the first commit
-                thresholds = measure_center_thresholds(batch_df)
-            fp = simhash_centered_pinned(batch_df, thresholds).persist()
-        else:
-            fp = simhash(batch_df).persist()
-        try:
-            # Materialize the fingerprint cache BEFORE the multi-leaf
-            # consumers (round 13): the Hamming-pair self-join and the
-            # corpus band join scan fp at several plan leaves inside
-            # one job — on a cold cache those leaves race and each
-            # recomputes the whole fingerprint subtree (measured 2-3x
-            # the batch cost at sf0.1; guide §5). One cheap count
-            # populates the cache once.
-            fp.count()
-            bands = simhash_band_rows(
-                fp, rung=rung, bit_blocks=bit_blocks
-            ).withColumn("rung", F.lit(int(rung)))
-            batch_dupes = (
-                simhash_hamming_pairs(
-                    fp, max_hamming=max_hamming, rung=rung,
-                    bit_blocks=bit_blocks,
-                )
-                .select(F.col("doc_b").alias("doc_id"))
-                .distinct()
-            )
-            survivors = batch_df.join(batch_dupes, "doc_id", "left_anti")
+        return _SimHash(
+            int(rung), max_hamming, blocks, index_bucket_k, thresholds
+        )
 
-            index = VersionedTable(index_path)
-            if index.current_version() is not None:
-                idx_df = index.read(spark)
-                # Rung is pinned per-index and validated on every
-                # batch: band rows written under a different rung would
-                # silently never join (global band_idx disambiguates
-                # rungs), letting duplicates of indexed docs through —
-                # a misconfigured writer must fail loudly instead. The
-                # stored rung comes from the manifest's table
-                # properties (one JSON read — ADVICE r9: the old
-                # min/max agg scanned the whole index per batch), with
-                # a single-row fallback for indexes committed before
-                # manifests carried ``meta``; every commit path writes
-                # a constant rung column, and migration rewrites all
-                # rows in one snapshot, so one row is authoritative. An
-                # EMPTY committed index has no rung to validate — it is
-                # treated as unvalidated, same as no version at all.
-                meta = index.manifest().get("meta") or {}
-                stored = meta.get("simhash_rung")
-                if stored is None:
-                    # Legacy fallback (pre-meta indexes only): aggregate
-                    # min/max over the rung column — deterministic, and
-                    # a corrupted mixed-rung index fails loudly instead
-                    # of nondeterministically passing on an arbitrary
-                    # row (ADVICE r10). Paid once per legacy index: the
-                    # next commit backfills the manifest property.
-                    row = idx_df.agg(
-                        F.min("rung").alias("lo"), F.max("rung").alias("hi")
-                    ).first()
-                    if row["lo"] is not None and row["lo"] != row["hi"]:
-                        raise ValueError(
-                            f"simhash gate: index at {index_path} holds "
-                            f"mixed rungs {row['lo']}..{row['hi']} — "
-                            "corrupted index; rebuild or migrate it"
-                        )
-                    stored = row["lo"]
-                if stored is not None and stored != rung:
-                    raise ValueError(
-                        f"simhash gate: index at {index_path} was built "
-                        f"at rung {stored} but this writer is pinned to "
-                        f"rung {rung}; migrate the index (re-band its "
-                        "stored fingerprints — operators/"
-                        "index_lifecycle.migrate_simhash_index) or pin "
-                        "the matching rung"
-                    )
-                # The banding permutation is pinned the same way: rows
-                # banded under a different bit assignment produce band
-                # values this writer's batches would never match —
-                # duplicates of indexed docs would silently pass. Only
-                # validated when the manifest carries meta (a pre-meta
-                # index predates permuted banding entirely).
-                if "simhash_rung" in meta:
-                    stored_blocks = meta.get("simhash_bit_blocks")
-                    if stored_blocks != blocks_meta:
-                        raise ValueError(
-                            f"simhash gate: index at {index_path} was "
-                            f"banded under bit assignment "
-                            f"{stored_blocks} but this writer is pinned "
-                            f"to {blocks_meta}; migrate the index "
-                            "(operators/index_lifecycle."
-                            "migrate_simhash_index with bit_blocks) or "
-                            "pin the matching assignment"
-                        )
-                    stored_k = meta.get("bucket_k")
-                    if stored_k != index_bucket_k:
-                        raise ValueError(
-                            f"simhash gate: index at {index_path} uses "
-                            f"bucket layout k={stored_k} but this "
-                            f"writer is pinned to k={index_bucket_k}; "
-                            "appending under a different layout would "
-                            "tear the partitioned table"
-                        )
-                    stored_centered = "simhash_center_s" in meta
-                    if stored_centered != centered:
-                        raise ValueError(
-                            f"simhash gate: index at {index_path} holds "
-                            f"{'centered' if stored_centered else 'zero-threshold'} "
-                            f"fingerprints but this writer is "
-                            f"{'centered' if centered else 'zero-threshold'}; "
-                            "the two fingerprint spaces never match — "
-                            "rebuild the index or match the writer"
-                        )
-                corpus_bands = idx_df.select(
-                    "band_idx",
-                    "band_val",
-                    F.col("simhash").alias("idx_simhash"),
-                )
-                corpus_hits = (
-                    bands.join(corpus_bands, ["band_idx", "band_val"])
-                    .filter(
-                        F.expr(
-                            "CAST(bit_count(simhash ^ idx_simhash)"
-                            f" AS BIGINT) <= {int(max_hamming)}"
-                        )
-                    )
-                    .select("doc_id")
-                    .distinct()
-                )
-                survivors = survivors.join(
-                    corpus_hits, "doc_id", "left_anti"
-                )
-
-            survivors = survivors.persist()
-            try:
-                # count() instead of isEmpty(): the emptiness guard is
-                # needed either way (an all-duplicate batch must not
-                # commit), and a full count materializes the survivors
-                # cache completely, so the accepted anti-join, the
-                # docs commit, and the index semi-join below read
-                # blocks instead of recomputing the partitions the
-                # early-exit probe never touched (round 13, guide §5).
-                if survivors.count() == 0:
-                    return
-                accepted = VersionedTable(accepted_path)
-                new_docs = survivors
-                if accepted.current_version() is not None:
-                    # Persisted across the emptiness probe + commit
-                    # (round 13): the anti-join re-reads the accepted
-                    # table's doc_id column, and without a cache the
-                    # isEmpty probe and the commit write each ran it.
-                    landed_ids = accepted.read(spark).select("doc_id")
-                    new_docs = survivors.join(
-                        landed_ids, "doc_id", "left_anti"
-                    ).persist()
-                try:
-                    if not new_docs.isEmpty():
-                        accepted.commit(new_docs, mode="append")
-                finally:
-                    if new_docs is not survivors:
-                        new_docs.unpersist()
-                idx_rows = bands.join(
-                    survivors.select("doc_id"), "doc_id", "left_semi"
-                )
-                idx_meta = {
-                    "simhash_rung": int(rung),
-                    "simhash_bit_blocks": blocks_meta,
-                }
-                if centered:
-                    idx_meta["simhash_center_s"] = [
-                        int(x) for x in thresholds["s"]
-                    ]
-                    idx_meta["simhash_center_n"] = int(thresholds["n"])
-                if index_bucket_k is not None:
-                    # Bucketed index layout (round 11, VERDICT r10 #2):
-                    # rows Hive-partitioned by id mod k, so an erasure
-                    # scrub rewrites only touched buckets
-                    # (scrub_index_to_corpus's pruned path). Bucket-
-                    # keyed REBALANCE (round 13; was repartition(k) in
-                    # round 12): keeps each batch's append at one file
-                    # per bucket while AQE sizes the exchange — tiny
-                    # batches coalesce to few tasks instead of k
-                    # near-empty ones, oversized buckets split into
-                    # advisory-sized files at scale (guide §6).
-                    idx_rows = idx_rows.withColumn(
-                        "pbucket",
-                        F.expr(
-                            f"CAST(pmod(doc_id, {int(index_bucket_k)})"
-                            " AS INT)"
-                        ),
-                    ).hint("rebalance", "pbucket")
-                    idx_meta["partition_by"] = "pbucket"
-                    idx_meta["bucket_k"] = int(index_bucket_k)
-                index.commit(idx_rows, mode="append", meta=idx_meta)
-            finally:
-                survivors.unpersist()
-        finally:
-            fp.unpersist()
-
-    return _apply
-
-
-RECOMMENDED_INDEX_BUCKET_K = 64
+    return _gate_writer(accepted_path, index_path, resolve)
 
 
 def recommended_simhash_gate_batch_writer(
@@ -712,87 +591,58 @@ def recommended_simhash_gate_batch_writer(
     max_hamming: int = 5,
     index_bucket_k: int = RECOMMENDED_INDEX_BUCKET_K,
 ) -> Callable[[DataFrame, int], None]:
-    """The DEFAULT build path for a NEW SimHash gate index (round 12,
-    VERDICT r11 #1): every scale mitigation round 11 proved is applied
-    with zero tuning arguments, so a fresh 2026 deployment gets the
-    mitigated collision floor and pruned maintenance instead of
-    rebuilding round 10's problems.
+    """The DEFAULT build path for a NEW SimHash gate index: every scale
+    mitigation is applied with zero tuning arguments.
 
     On a FRESH index (no committed version) the first batch measures
-    and pins the full recommended layout in one cadence:
+    and the first commit pins the full recommended layout:
 
-    - **centered fingerprints** (``simhash_center_s/n`` pinned in the
-      manifest; q306: band-collision skew inflation ~1x vs 404x raw);
-    - **entropy-balanced banding** (``simhash_bit_blocks`` measured
-      over the first batch's centered fingerprints — insurance against
+    - **centered fingerprints** (``simhash_center_s/n``; q306: band-
+      collision skew inflation ~1x vs 404x raw);
+    - **entropy-balanced banding** (``simhash_bit_blocks`` measured over
+      the first batch's centered fingerprints — insurance against
       template-burst skew the centering can't see, q304);
     - **bucketed partition layout** (``bucket_k`` — erasure scrubs and
       deletes prune to touched buckets, q308: 115x less write volume).
 
-    On an EXISTING index the ENTIRE configuration is adopted from the
-    manifest's table properties — rung, banding assignment, bucket
-    layout, centered thresholds — so a restarted writer needs no
-    arguments and can never fail its own index's validation. (The
-    explicit :func:`simhash_gate_batch_writer` kwargs remain the
-    legacy/tuning path; a pre-meta legacy index has no stored
-    configuration to adopt and must use it.) ``rung``/``max_hamming``/
-    ``index_bucket_k`` only shape a FRESH build.
+    On an EXISTING index the entire configuration is adopted from the
+    manifest — rung, banding assignment, bucket layout, centered
+    thresholds — so a restarted writer needs no arguments and can never
+    fail its own index's validation. A pre-meta legacy index has no
+    stored configuration to adopt and raises (use the explicit
+    :func:`simhash_gate_batch_writer`). ``rung``/``index_bucket_k`` only
+    shape a FRESH build.
 
-    Measurement cost: one extra 61-sum aggregate + one fingerprint
-    pass on the first batch only; every later batch pays exactly what
-    the explicit writer pays (one manifest JSON read).
+    Measurement cost: one 61-sum aggregate + one fingerprint pass on
+    the first batch only.
     """
-    from movie_data_pipeline_spark.operators.dedup import (
-        measure_balanced_bit_blocks,
-        measure_center_thresholds,
-        simhash_centered_pinned,
-    )
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        idx = VersionedTable(index_path)
-        if idx.current_version() is not None:
-            meta = idx.manifest().get("meta") or {}
-            if "simhash_rung" not in meta:
-                raise ValueError(
-                    f"recommended simhash gate: index at {index_path} "
-                    "is a legacy pre-meta index with no stored "
-                    "configuration to adopt — use "
-                    "simhash_gate_batch_writer with explicit arguments "
-                    "or migrate the index first"
-                )
-            inner = simhash_gate_batch_writer(
-                accepted_path,
-                index_path,
-                rung=int(meta["simhash_rung"]),
-                max_hamming=max_hamming,
-                bit_blocks=meta.get("simhash_bit_blocks"),
-                index_bucket_k=meta.get("bucket_k"),
-                centered="simhash_center_s" in meta,
-            )
-        else:
-            # Fresh build: measure the recommended layout from this
-            # batch. The inner writer re-measures the thresholds
-            # (deterministic — same batch, same aggregate) and pins
-            # them with the first commit.
+    def resolve(batch_df: DataFrame, meta: dict | None) -> _SimHash:
+        if meta is None:
             thresholds = measure_center_thresholds(batch_df)
             blocks = measure_balanced_bit_blocks(
                 simhash_centered_pinned(batch_df, thresholds)
             )
-            inner = simhash_gate_batch_writer(
-                accepted_path,
-                index_path,
-                rung=rung,
-                max_hamming=max_hamming,
-                bit_blocks=blocks,
-                index_bucket_k=int(index_bucket_k),
-                centered=True,
+            return _SimHash(
+                int(rung), max_hamming, blocks, int(index_bucket_k),
+                thresholds,
             )
-        inner(batch_df, batch_id)
+        if "simhash_rung" not in meta:
+            raise ValueError(
+                f"recommended simhash gate: index at {index_path} is a "
+                "legacy pre-meta index with no stored configuration to "
+                "adopt — use simhash_gate_batch_writer with explicit "
+                "arguments or migrate the index first"
+            )
+        return _SimHash(
+            int(meta["simhash_rung"]),
+            max_hamming,
+            meta.get("simhash_bit_blocks"),
+            meta.get("bucket_k"),
+            _pinned_thresholds(meta),
+        )
 
-    return _apply
+    return _gate_writer(accepted_path, index_path, resolve)
 
 
 def start_recommended_simhash_gate_stream(
@@ -804,16 +654,8 @@ def start_recommended_simhash_gate_stream(
 ) -> StreamingQuery:
     """Document stream → SimHash-gated corpus + index under the
     recommended scale-safe layout, zero tuning arguments."""
-    writer = (
-        docs.writeStream.foreachBatch(
-            recommended_simhash_gate_batch_writer(accepted_path, index_path)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = recommended_simhash_gate_batch_writer(accepted_path, index_path)
+    return _start(docs, writer, checkpoint, trigger_available_now)
 
 
 def recommended_dedup_gate_batch_writer(
@@ -821,26 +663,19 @@ def recommended_dedup_gate_batch_writer(
     index_path: str,
     index_bucket_k: int = RECOMMENDED_INDEX_BUCKET_K,
 ) -> Callable[[DataFrame, int], None]:
-    """Recommended MinHash gate (round 12, VERDICT r11 #1): a fresh
-    index gets the bucketed partition layout (pruned erasure scrubs);
-    an existing index's layout is adopted from its manifest so a
-    restarted writer needs no arguments. The MinHash family has no
-    centered/banding axis — bucket layout is its one scale knob."""
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
+    """Recommended MinHash gate: a fresh index gets the bucketed
+    partition layout (pruned erasure scrubs); an existing index's
+    layout is adopted from its manifest (an unbucketed one stays
+    unbucketed), so a restarted writer needs no arguments. The MinHash
+    family has no centered/banding axis — bucket layout is its one
+    scale knob."""
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        idx = VersionedTable(index_path)
-        if idx.current_version() is not None:
-            k = (idx.manifest().get("meta") or {}).get("bucket_k")
-        else:
-            k = int(index_bucket_k)
-        dedup_gate_batch_writer(
-            accepted_path, index_path, index_bucket_k=k
-        )(batch_df, batch_id)
+    def resolve(batch_df: DataFrame, meta: dict | None) -> _MinHash:
+        if meta is None:
+            return _MinHash(int(index_bucket_k))
+        return _MinHash(meta.get("bucket_k"))
 
-    return _apply
+    return _gate_writer(accepted_path, index_path, resolve)
 
 
 def start_simhash_gate_stream(
@@ -855,17 +690,8 @@ def start_simhash_gate_stream(
     trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Document stream → SimHash-gated versioned corpus + band index."""
-    writer = (
-        docs.writeStream.foreachBatch(
-            simhash_gate_batch_writer(
-                accepted_path, index_path, rung=rung,
-                bit_blocks=bit_blocks, index_bucket_k=index_bucket_k,
-                centered=centered,
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    writer = simhash_gate_batch_writer(
+        accepted_path, index_path, rung=rung, bit_blocks=bit_blocks,
+        index_bucket_k=index_bucket_k, centered=centered,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, writer, checkpoint, trigger_available_now)

@@ -11,6 +11,7 @@ import pytest
 from movie_data_pipeline_spark.sources.versioned import VersionedTable
 from movie_data_pipeline_spark.streaming import (
     dedup_gate_batch_writer,
+    recommended_dedup_gate_batch_writer,
     start_dedup_gate_stream,
 )
 
@@ -99,6 +100,34 @@ def test_gate_replay_after_crash_between_commits(spark, tmp_path):
     assert {
         r.doc_id for r in VersionedTable(idx).read(spark).collect()
     } == {0, 1}
+
+
+def test_recommended_gate_replay_after_crash_on_fresh_bucketed_index(
+    spark, tmp_path
+):
+    """The crash-between-commits replay on the recommended writer (the
+    path the ingest benchmark drives): the index manifests are rolled
+    back to a fresh index, so the replay re-resolves the recommended
+    bucketed layout, must not re-append the landed docs, and must
+    back-fill the index under that layout."""
+    acc, idx = str(tmp_path / "acc"), str(tmp_path / "idx")
+    writer = recommended_dedup_gate_batch_writer(acc, idx)
+    batch = _docs(spark, [(0, BASE), (1, OTHER)])
+
+    writer(batch, 0)
+    index = VersionedTable(idx)
+    for v in index.versions():
+        os.unlink(index._manifest_path(v))
+
+    writer(batch, 0)  # at-least-once replay
+    assert len(VersionedTable(acc).versions()) == 1
+    rows = VersionedTable(acc).read(spark).collect()
+    assert sorted(r.doc_id for r in rows) == [0, 1]
+    assert {r.doc_id for r in index.read(spark).collect()} == {0, 1}
+    assert index.manifest()["meta"] == {
+        "partition_by": "pbucket",
+        "bucket_k": 64,
+    }
 
 
 def test_gate_stream_end_to_end(spark, tmp_path):

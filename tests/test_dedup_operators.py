@@ -117,6 +117,26 @@ def test_ppjoin_matches_bruteforce_on_crafted(corpus):
     assert got == want  # lossless: identical pair set AND values
 
 
+def test_ppjoin_releases_caches_when_it_raises(spark, corpus, monkeypatch):
+    """A failure after ppjoin_pairs has persisted and filled its
+    shingle and verification-array caches must still release both —
+    a long-lived session may not accumulate blocks per failed call.
+    Compared against the persisted set before the call: local
+    checkpoints of earlier tests in the shared session stay registered
+    until the JVM collects them."""
+    from movie_data_pipeline_spark.operators.dedup import ppjoin_pairs
+
+    def fail(*cols):  # the verify step, after both caches are filled
+        raise RuntimeError("planted failure")
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    monkeypatch.setattr(F, "array_intersect", fail)
+    with pytest.raises(RuntimeError, match="planted failure"):
+        ppjoin_pairs(corpus, threshold=0.5)
+    assert set(persisted().keys()) - before == set()
+
+
 @pytest.mark.parametrize("threshold", [0.3, 0.5, 0.8])
 def test_ppjoin_lossless_vs_uncapped_bucket_join(spark, threshold):
     """Independent-implementation equivalence on the real synthetic
