@@ -284,6 +284,38 @@ _REVERIFY_EVENTS: tuple[tuple[str, int], ...] = (
     ("q313_recommended_gate_replay", 14),
     ("q315_center_threshold_drift", 14),
     ("q317_bucketed_gate_compaction", 14),
+    # round 15: every replay builder moved onto the shared replay
+    # harness (plans/core.py: scratch dir, staged stream sources,
+    # batch-count check, result frames) and operators/util.overlap;
+    # q286 builds its manifest through the shared order derivation.
+    ("q204_streaming_hourly_upsert", 15),
+    ("q205_streaming_dedup_gate", 15),
+    ("q210_streaming_drift_replay", 15),
+    ("q220_streaming_join_replay", 15),
+    ("q221_streaming_session_replay", 15),
+    ("q244_streaming_multibatch_gate", 15),
+    ("q267_streaming_closed_window_ledger", 15),
+    ("q286_training_order_manifest", 15),
+    ("q287_simhash_index_gate", 15),
+    ("q292_simhash_multibatch_gate", 15),
+    ("q295_index_erasure_audit", 15),
+    ("q296_simhash_rung_migration", 15),
+    ("q299_erasure_vacuum_compliance", 15),
+    ("q301_minhash_index_erasure", 15),
+    ("q302_midstream_erasure_gate", 15),
+    ("q303_ann_index_erasure", 15),
+    ("q307_banding_migration_gate", 15),
+    ("q308_partitioned_index_erasure", 15),
+    ("q309_ivf_centroid_migration", 15),
+    ("q310_manifest_staleness_audit", 15),
+    ("q311_centered_gate_replay", 15),
+    ("q312_gate_compaction_replay", 15),
+    ("q313_recommended_gate_replay", 15),
+    ("q314_manifest_republish", 15),
+    ("q315_center_threshold_drift", 15),
+    ("q316_ivf_cell_split_recovery", 15),
+    ("q317_bucketed_gate_compaction", 15),
+    ("q318_maintenance_planner", 15),
 )
 
 

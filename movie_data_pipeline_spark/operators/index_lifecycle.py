@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from movie_data_pipeline_spark.operators.util import overlap
 from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
 
@@ -700,6 +701,47 @@ def recenter_simhash_index(
     return index.commit(rebanded, mode="overwrite", meta=meta)
 
 
+def _order_members(
+    corpus: "DataFrame", order_seed: str, n_shards: int, id_col: str
+) -> "DataFrame":
+    """Every member's (id, rnk, shard, digest) under the seeded training
+    order: seeded-md5 global rank (range-partition sort, no global
+    window), fixed-size shards of ceil(n / n_shards) ranks, and a
+    32-bit hash of (id, rank) per member."""
+    from movie_data_pipeline_spark.functions.text import base_hash32
+    from movie_data_pipeline_spark.operators.prefix import (
+        attach_global_row_number,
+    )
+
+    h = corpus.select(
+        id_col,
+        F.md5(
+            F.concat(F.col(id_col).cast("string"), F.lit(order_seed))
+        ).alias("hk"),
+    )
+    ranked, _n = attach_global_row_number(h, ["hk", id_col], out="rnk")
+    # In-plan corpus count for the shard width — aggregated from the
+    # PRE-rank frame: counting ``ranked`` would replay the whole
+    # range-partition sort a second time just to produce one number
+    # (ADVICE r9); ``h`` is the same row set one cheap scan earlier.
+    n1 = h.agg(F.count("*").alias("n"))
+    return ranked.crossJoin(F.broadcast(n1)).select(
+        id_col,
+        "rnk",
+        F.expr(
+            f"(rnk - 1) div ((n + {int(n_shards) - 1})"
+            f" div {int(n_shards)})"
+        ).alias("shard"),
+        base_hash32(
+            F.concat(
+                F.col(id_col).cast("string"),
+                F.lit(":"),
+                F.col("rnk").cast("string"),
+            )
+        ).alias("digest"),
+    )
+
+
 def build_order_manifest(
     corpus: "DataFrame",
     order_seed: str,
@@ -719,38 +761,12 @@ def build_order_manifest(
     :func:`republish_manifest`. Linear: one rank pass + one
     groupBy(shard).
     """
-    from movie_data_pipeline_spark.functions.text import base_hash32
-    from movie_data_pipeline_spark.operators.prefix import (
-        attach_global_row_number,
-    )
-
-    h = corpus.select(
-        id_col,
-        F.md5(
-            F.concat(F.col(id_col).cast("string"), F.lit(order_seed))
-        ).alias("hk"),
-    )
-    ranked, _n = attach_global_row_number(h, ["hk", id_col], out="rnk")
-    n1 = h.agg(F.count("*").alias("n"))
-    s = ranked.crossJoin(F.broadcast(n1)).withColumn(
-        "shard",
-        F.expr(
-            f"(rnk - 1) div ((n + {int(n_shards) - 1})"
-            f" div {int(n_shards)})"
-        ),
-    )
-    digest = base_hash32(
-        F.concat(
-            F.col(id_col).cast("string"),
-            F.lit(":"),
-            F.col("rnk").cast("string"),
-        )
-    )
-    return s.groupBy("shard").agg(
+    members = _order_members(corpus, order_seed, n_shards, id_col)
+    return members.groupBy("shard").agg(
         F.count("*").alias("n_docs"),
         F.min("rnk").alias("min_rank"),
         F.max("rnk").alias("max_rank"),
-        F.sum(digest).alias("content_digest"),
+        F.sum("digest").alias("content_digest"),
     )
 
 
@@ -833,13 +849,6 @@ def audit_shard_manifest(
     column-pruned joins + one groupBy(shard) — linear, exactly the
     manifest build cost.
     """
-    from pyspark.sql import DataFrame  # noqa: F401
-
-    from movie_data_pipeline_spark.functions.text import base_hash32
-    from movie_data_pipeline_spark.operators.prefix import (
-        attach_global_row_number,
-    )
-
     mt = VersionedTable(manifest_path)
     meta = mt.manifest().get("meta") or {}
     for key in ("order_seed", "n_shards", "built_at_corpus_version"):
@@ -849,31 +858,15 @@ def audit_shard_manifest(
                 "property — publish manifests with their derivation "
                 "pinned (seed, shard count, corpus version)"
             )
-    seed, n_shards = meta["order_seed"], int(meta["n_shards"])
     built_v = int(meta["built_at_corpus_version"])
     corpus_t = VersionedTable(corpus_path)
-    corpus0 = corpus_t.read(spark, version=built_v)
-    current_ids = corpus_t.read(spark).select(id_col)
-
-    h = corpus0.select(
+    members = _order_members(
+        corpus_t.read(spark, version=built_v),
+        meta["order_seed"],
+        int(meta["n_shards"]),
         id_col,
-        F.md5(
-            F.concat(F.col(id_col).cast("string"), F.lit(seed))
-        ).alias("hk"),
     )
-    ranked, _n = attach_global_row_number(h, ["hk", id_col], out="rnk")
-    n1 = h.agg(F.count("*").alias("n"))
-    members = ranked.crossJoin(F.broadcast(n1)).withColumn(
-        "shard",
-        F.expr(f"(rnk - 1) div ((n + {n_shards - 1}) div {n_shards})"),
-    )
-    digest = base_hash32(
-        F.concat(
-            F.col(id_col).cast("string"),
-            F.lit(":"),
-            F.col("rnk").cast("string"),
-        )
-    )
+    current_ids = corpus_t.read(spark).select(id_col)
     flagged = members.join(
         current_ids.withColumn("__live", F.lit(1)), id_col, "left"
     )
@@ -882,7 +875,7 @@ def audit_shard_manifest(
             F.when(F.col("__live").isNull(), 1).otherwise(0)
         ).alias("n_missing"),
         F.sum(
-            F.when(F.col("__live").isNotNull(), digest).otherwise(0)
+            F.when(F.col("__live").isNotNull(), F.col("digest")).otherwise(0)
         ).alias("surviving_digest"),
     )
     published = mt.read(spark).select(
@@ -1047,9 +1040,6 @@ def plan_maintenance(
     if not tasks:
         raise ValueError("plan_maintenance: nothing to evaluate")
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, len(tasks))) as pool:
-        futures = [(t, a, pool.submit(fn)) for t, a, fn in tasks]
-        out = [row(t, a, *f.result()) for t, a, f in futures]
+    results = overlap(*(fn for _t, _a, fn in tasks))
+    out = [row(t, a, *r) for (t, a, _fn), r in zip(tasks, results)]
     return reduce(DataFrame.unionByName, out).orderBy("target", "action")

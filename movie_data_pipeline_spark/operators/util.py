@@ -2,7 +2,22 @@
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, functions as F
+
+
+def overlap(*thunks):
+    """Run independent driver-side thunks from up to 4 threads, so the
+    Spark jobs each submits overlap and one's straggler tail back-fills
+    with the others' tasks. Returns their results in argument order;
+    once all have finished, re-raises the first exception in argument
+    order. The threads inherit no Spark local properties. Callers must
+    not overlap a writer with readers of the same table.
+    """
+    with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
+        futures = [pool.submit(t) for t in thunks]
+        return [f.result() for f in futures]
 
 
 def spread(df: DataFrame, min_factor: int = 2) -> DataFrame:

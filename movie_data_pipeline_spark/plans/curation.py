@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 from movie_data_pipeline_spark.functions.text import tokens
 from movie_data_pipeline_spark.operators.dedup import JACCARD_MAX_SHINGLE_DF
 from movie_data_pipeline_spark.operators.packing import pack_documents
-from movie_data_pipeline_spark.plans.core import query, r4, round4
+from movie_data_pipeline_spark.operators.util import overlap
+from movie_data_pipeline_spark.plans.core import _scratch, query, r4, round4
 from movie_data_pipeline_spark.plans.text import (
     ENGLISH_STOPWORDS,
     LANG_PICK_SQL,
@@ -1598,47 +1599,13 @@ def q286_training_order_manifest(
     32-bit hashes — order-independent, overflow-safe to ~10^9 docs,
     and exact-integer on both engines.
     """
-    from movie_data_pipeline_spark.functions.text import base_hash32
-    from movie_data_pipeline_spark.operators.prefix import (
-        attach_global_row_number,
+    from movie_data_pipeline_spark.operators.index_lifecycle import (
+        build_order_manifest,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    h = docs.select(
-        "doc_id",
-        F.md5(
-            F.concat(F.col("doc_id").cast("string"), F.lit(_ORDER_SEED))
-        ).alias("hk"),
-    )
-    ranked, _n = attach_global_row_number(h, ["hk", "doc_id"], out="rnk")
-    # In-plan corpus count for the shard width — aggregated from the
-    # PRE-rank frame: counting ``ranked`` would replay the whole
-    # range-partition sort a second time just to produce one number
-    # (ADVICE r9); ``h`` is the same row set one cheap scan earlier.
-    n1 = h.agg(F.count("*").alias("n"))
-    s = ranked.crossJoin(F.broadcast(n1)).withColumn(
-        "shard",
-        F.expr(
-            f"(rnk - 1) div ((n + {_ORDER_SHARDS - 1}) div {_ORDER_SHARDS})"
-        ),
-    )
-    digest = base_hash32(
-        F.concat(
-            F.col("doc_id").cast("string"),
-            F.lit(":"),
-            F.col("rnk").cast("string"),
-        )
-    )
-    return (
-        s.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("rnk").alias("min_rank"),
-            F.max("rnk").alias("max_rank"),
-            F.sum(digest).alias("content_digest"),
-        )
-        .orderBy("shard")
-    )
+    return build_order_manifest(
+        load_table(spark, sf_dir, "documents"), _ORDER_SEED, _ORDER_SHARDS
+    ).orderBy("shard")
 
 
 # --------------------------------------------------------------------------
@@ -2304,9 +2271,6 @@ def q310_manifest_staleness_audit(
     column-pruned joins + one groupBy(shard) — the audit costs what
     the manifest build cost.
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         audit_shard_manifest,
         erase_documents,
@@ -2314,9 +2278,8 @@ def q310_manifest_staleness_audit(
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
     docs = load_table(spark, sf_dir, "documents")
-    base = _tempfile.mkdtemp(prefix="mdp-q310-")
-    corpus_path, manifest_path = f"{base}/corpus", f"{base}/manifest"
-    try:
+    with _scratch("q310") as base:
+        corpus_path, manifest_path = f"{base}/corpus", f"{base}/manifest"
         VersionedTable(corpus_path).commit(docs)
         # build the q286 manifest from the COMMITTED corpus snapshot
         # (round 12: through the ONE factored derivation republish and
@@ -2352,8 +2315,6 @@ def q310_manifest_staleness_audit(
             "n_missing_docs": int(row["m"]),
         }, (recorded, row)
         return audit
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2429,9 +2390,6 @@ def q314_manifest_republish(
     pass + one groupBy(shard)) — the same price the original publish
     paid; the audit legs are two column-pruned joins each. Linear.
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         audit_shard_manifest,
         build_order_manifest,
@@ -2440,9 +2398,8 @@ def q314_manifest_republish(
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
     docs = load_table(spark, sf_dir, "documents")
-    base = _tempfile.mkdtemp(prefix="mdp-q314-")
-    corpus_path, manifest_path = f"{base}/corpus", f"{base}/manifest"
-    try:
+    with _scratch("q314") as base:
+        corpus_path, manifest_path = f"{base}/corpus", f"{base}/manifest"
         VersionedTable(corpus_path).commit(docs)
         c0 = VersionedTable(corpus_path).read(spark, version=0)
         VersionedTable(manifest_path).commit(
@@ -2494,8 +2451,6 @@ def q314_manifest_republish(
             F.col("content_digest").cast("long").alias("content_digest"),
         ).orderBy("shard")
         return result.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2612,9 +2567,6 @@ def q318_maintenance_planner(
     anti-join per index, one distinct count, one vote aggregate, one
     manifest re-derivation) — all linear, all column-pruned.
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from movie_data_pipeline_spark.operators.dedup import (
         band_signatures,
         measure_center_thresholds,
@@ -2629,10 +2581,9 @@ def q318_maintenance_planner(
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
     docs = load_table(spark, sf_dir, "documents")
-    base = _tempfile.mkdtemp(prefix="mdp-q318-")
-    corpus_p = f"{base}/corpus"
-    sh_p, mh_p, man_p = f"{base}/sh", f"{base}/mh", f"{base}/man"
-    try:
+    with _scratch("q318") as base:
+        corpus_p = f"{base}/corpus"
+        sh_p, mh_p, man_p = f"{base}/sh", f"{base}/mh", f"{base}/man"
         VersionedTable(corpus_p).commit(docs)
         c0 = VersionedTable(corpus_p).read(spark, version=0)
 
@@ -2675,15 +2626,7 @@ def q318_maintenance_planner(
                 },
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for f in [
-                pool.submit(_build_sh),
-                pool.submit(_build_mh),
-                pool.submit(_build_man),
-            ]:
-                f.result()
+        overlap(_build_sh, _build_mh, _build_man)
         # the un-maintained erasure the planner exists to catch
         VersionedTable(corpus_p).delete_where(spark, "doc_id % 6 = 2")
 
@@ -2703,5 +2646,3 @@ def q318_maintenance_planner(
         assert rec[("minhash_bands", "scrub")] == 1
         assert rec[("epoch0", "republish")] == 1
         return plan
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)

@@ -42,8 +42,9 @@ from movie_data_pipeline_spark.operators.graph import (
 from movie_data_pipeline_spark.operators.util import (
     fixed_sample,
     fixed_sample_ctes,
+    overlap,
 )
-from movie_data_pipeline_spark.plans.core import query, r4, round4
+from movie_data_pipeline_spark.plans.core import _scratch, query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
 
 # DuckDB mirrors of the shared text expressions. Slices are 1-based and
@@ -3945,12 +3946,10 @@ def q288_cluster_churn_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back-fill each run's straggler tail with the other's tasks
     # (guide §2.6). Results are deterministic either way — the threads
     # only overlap job submission.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(comp, _CHURN_PRED_A, "ca")
-        fb = pool.submit(comp, _CHURN_PRED_B, "cb")
-        shared = fa.result().join(fb.result(), "doc_id")
+    comp_a, comp_b = overlap(
+        lambda: comp(_CHURN_PRED_A, "ca"), lambda: comp(_CHURN_PRED_B, "cb")
+    )
+    shared = comp_a.join(comp_b, "doc_id")
     per_a = shared.groupBy("ca").agg(
         F.count("*").alias("n_shared"),
         F.countDistinct("cb").alias("n_b_clusters"),
@@ -4903,9 +4902,6 @@ def q315_center_threshold_drift(
     data (the audit's per-bit rows explode from the single aggregate
     row in-plan).
     """
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from movie_data_pipeline_spark.operators.dedup import (
         measure_balanced_bit_blocks,
         measure_center_thresholds,
@@ -4922,9 +4918,8 @@ def q315_center_threshold_drift(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = _tempfile.mkdtemp(prefix="mdp-q315-")
-    corpus_path, index_path = f"{base}/corpus", f"{base}/idx"
-    try:
+    with _scratch("q315") as base:
+        corpus_path, index_path = f"{base}/corpus", f"{base}/idx"
         VersionedTable(corpus_path).commit(docs)
         batch0 = docs.filter(F.col("doc_id") % 4 == 0)
         th0 = measure_center_thresholds(batch0)
@@ -5024,13 +5019,7 @@ def q315_center_threshold_drift(
             assert VersionedTable(corpus_path).current_version() == 0
             assert idx_t.current_version() == 1
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_after = pool.submit(_after_audit)
-            f_eq = pool.submit(_equality)
-            after = f_after.result()
-            f_eq.result()
+        after, _ = overlap(_after_audit, _equality)
         _boundary()
 
         result = (
@@ -5040,5 +5029,3 @@ def q315_center_threshold_drift(
             .orderBy("phase", "bit_idx")
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)

@@ -21,8 +21,9 @@ from movie_data_pipeline_spark.operators.similarity import (
 from movie_data_pipeline_spark.operators.util import (
     fixed_sample,
     fixed_sample_ctes,
+    overlap,
 )
-from movie_data_pipeline_spark.plans.core import query, r4, round4
+from movie_data_pipeline_spark.plans.core import _scratch, query, r4, round4
 from movie_data_pipeline_spark.sources.registry import load_table
 
 # Query set: every 100th vector — scales with the corpus (5 queries at
@@ -2799,13 +2800,9 @@ def q303_ann_index_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_data_pipeline_spark.operators.similarity import ivf_assign
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
 
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
-    base = _tempfile.mkdtemp(prefix="mdp-q303-")
-    corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
-    try:
+    with _scratch("q303") as base:
+        corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
         assigned = ivf_assign(emb, n_cells=_IVF_CELLS)
         VersionedTable(corpus_path).commit(emb)
         VersionedTable(index_path).commit(
@@ -2855,8 +2852,6 @@ def q303_ann_index_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("cell")
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -3001,13 +2996,9 @@ def q309_ivf_centroid_migration(
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from pyspark.sql.window import Window
 
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
-    base = _tempfile.mkdtemp(prefix="mdp-q309-")
-    corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
-    try:
+    with _scratch("q309") as base:
+        corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
         assigned = ivf_assign(emb, n_cells=_IVF_CELLS)
         VersionedTable(corpus_path).commit(emb)
         idx_t = VersionedTable(index_path)
@@ -3142,8 +3133,6 @@ def q309_ivf_centroid_migration(
         result = result.localCheckpoint(eager=True)
         exact.unpersist()
         return result
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -3371,8 +3360,6 @@ def q316_ivf_cell_split_recovery(
     legs are O(queries x corpus) on the fixed 64-query sample.
     """
     import math as _math
-    import shutil as _shutil
-    import tempfile as _tempfile
     from functools import reduce
 
     from movie_data_pipeline_spark.operators.index_lifecycle import (
@@ -3391,9 +3378,8 @@ def q316_ivf_cell_split_recovery(
     from pyspark.sql.window import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = _tempfile.mkdtemp(prefix="mdp-q316-")
-    corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
-    try:
+    with _scratch("q316") as base:
+        corpus_path, index_path = f"{base}/vectors", f"{base}/ivf"
         assigned = ivf_assign(emb, n_cells=_IVF_CELLS)
         seed_rows = (
             emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -3530,15 +3516,12 @@ def q316_ivf_cell_split_recovery(
         # probe's straggler tail with the others' tasks (guide §2.6 —
         # the q288 pattern). Deterministic: threads only overlap job
         # submission; results are consumed in fixed order.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_pre = pool.submit(probe, 0, full, exact_pre, 2)
-            f_shrunk = pool.submit(probe, 2, surv, exact_post, 1)
-            f_restored = pool.submit(probe, 3, surv, exact_post, 2)
-            recall_pre, _ = f_pre.result()
-            recall_shrunk, cand_s = f_shrunk.result()
-            recall_restored, cand_r = f_restored.result()
+        [(recall_pre, _), (recall_shrunk, cand_s),
+         (recall_restored, cand_r)] = overlap(
+            lambda: probe(0, full, exact_pre, 2),
+            lambda: probe(2, surv, exact_post, 1),
+            lambda: probe(3, surv, exact_post, 2),
+        )
         # the codebook-width claim: at EQUAL scan budget (1/4 vs 2/8 of
         # the cells) the restored index must beat the shrunken one
         assert recall_restored >= recall_shrunk, (
@@ -3582,5 +3565,3 @@ def q316_ivf_cell_split_recovery(
         exact_post.unpersist()
         result = reduce(DataFrame.unionByName, rows).orderBy("metric", "k")
         return result.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)

@@ -17,17 +17,44 @@ table equals the batch aggregate REGARDLESS of how availableNow
 sliced the input into micro-batches. Sums are per-term DECIMAL casts
 (order-independent), and the hour key is epoch seconds (timezone-
 independent under any driver session).
+
+Replay harness (``plans/core.py``; the curation, similarity and dedup
+replays use it too). Every builder runs inside ``_scratch(name)``, a
+temp dir removed on every exit, so whatever it returns is
+localCheckpoint-materialized first. Multi-batch replays stage their
+input frames as single-file stream sources (``_stage``: one
+``coalesce(1)`` write, the driver renames the part; a write that
+leaves no part file fails loudly) in one of two shapes:
+``_staged_batches`` — one source dir, mtimes strictly increasing, read
+with ``maxFilesPerTrigger=1``, so each frame is one micro-batch in
+order — or ``_staged_streams`` — one source per frame, for replays that
+run a gate stream per frame with a lifecycle step in between.
+``_require_batches`` asserts from the query's own progress that the
+stream really ran that many data-carrying micro-batches. Gate replays
+return ``_accepted`` (the accepted corpus by doc_id); lifecycle audits
+return ``_metrics`` over ``_metric`` (row count) and ``_const``
+(driver-side number) rows. Independent eager legs on different tables
+overlap through ``operators/util.overlap``.
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movie_data_pipeline_spark.plans.core import query, r4, round4
+from movie_data_pipeline_spark.plans.core import (
+    _accepted,
+    _const,
+    _metric,
+    _metrics,
+    _require_batches,
+    _scratch,
+    _staged_batches,
+    _staged_streams,
+    query,
+    r4,
+    round4,
+)
 from movie_data_pipeline_spark.plans.dedup import _MINHASH_LONG_CTES
 from movie_data_pipeline_spark.operators.dedup import LSH_BAND_ROWS
 
@@ -44,22 +71,6 @@ def _await(q, what: str, timeout: int = 600) -> None:
         raise RuntimeError(
             f"{what}: streaming replay did not finish within {timeout}s"
         )
-
-
-def _one_part(out_dir: str, what: str) -> str:
-    """Path of the single part file a ``coalesce(1)`` write produced.
-    An EMPTY half (tiny or filtered corpus) writes no part file at all
-    — the old ``glob(...)[0]`` raised a bare IndexError there (ADVICE
-    r10); fail with the same explicit vacuous-case message q295 uses."""
-    import glob as _glob
-
-    parts = _glob.glob(f"{out_dir}/part-*.parquet")
-    if not parts:
-        raise AssertionError(
-            f"{what}: an input half wrote no rows — the replay would "
-            "be vacuous on this corpus (empty or fully filtered half)"
-        )
-    return parts[0]
 
 
 def _assert_single_file(path: str, what: str) -> None:
@@ -119,9 +130,7 @@ def q204_streaming_hourly_upsert(
 
     Scale: state is one row per open (hour, event_type) window,
     evicted by the 2 h watermark; the sink write is proportional to
-    per-batch key churn (see streaming/sinks.py). The returned frame
-    is localCheckpoint-materialized so the temp sink directory can be
-    removed before the driver consumes it.
+    per-batch key churn (see streaming/sinks.py).
     """
     from movie_data_pipeline_spark.streaming.events import (
         hourly_type_totals_stream,
@@ -131,9 +140,8 @@ def q204_streaming_hourly_upsert(
         start_upsert_stream,
     )
 
-    base = tempfile.mkdtemp(prefix="mdp-q204-")
-    table, ckpt = f"{base}/table", f"{base}/ckpt"
-    try:
+    with _scratch("q204") as base:
+        table, ckpt = f"{base}/table", f"{base}/ckpt"
         stats = hourly_type_totals_stream(stream_events(spark, sf_dir))
         q = start_upsert_stream(
             stats, table, ckpt, keys=["ts_hour_epoch", "event_type"]
@@ -150,8 +158,6 @@ def q204_streaming_hourly_upsert(
             .orderBy("ts_hour_epoch", "event_type")
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -194,7 +200,6 @@ def q205_streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior is covered by the ordering-aware unit tests
     (tests/test_dedup_gate.py).
     """
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.events import stream_table
     from movie_data_pipeline_spark.streaming.sinks import (
         start_dedup_gate_stream,
@@ -203,21 +208,12 @@ def q205_streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_data_pipeline_spark.sources.registry import table_path
 
     _assert_single_file(table_path(sf_dir, "documents"), "q205")
-    base = tempfile.mkdtemp(prefix="mdp-q205-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with _scratch("q205") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_dedup_gate_stream(docs, acc, idx, ckpt)
         _await(q, "q205")
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return _accepted(spark, acc)
 
 
 @query(
@@ -268,9 +264,8 @@ def q220_streaming_join_replay(
         stream_table,
     )
 
-    base = tempfile.mkdtemp(prefix="mdp-q220-")
-    out, ckpt = f"{base}/out", f"{base}/ckpt"
-    try:
+    with _scratch("q220") as base:
+        out, ckpt = f"{base}/out", f"{base}/ckpt"
         ev = stream_table(spark, sf_dir, "events")
         # NTZ→instant conversion matches stream_events (footer-sniffed)
         from movie_data_pipeline_spark.sources.registry import (
@@ -310,8 +305,6 @@ def q220_streaming_join_replay(
             .orderBy("click_id", "purchase_id")
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -374,9 +367,8 @@ def q221_streaming_session_replay(
     )
     from movie_data_pipeline_spark.streaming.events import stream_table
 
-    base = tempfile.mkdtemp(prefix="mdp-q221-")
-    out, ckpt = f"{base}/out", f"{base}/ckpt"
-    try:
+    with _scratch("q221") as base:
+        out, ckpt = f"{base}/out", f"{base}/ckpt"
         ev = stream_table(spark, sf_dir, "events")
         micros = (
             "ts div 1000"
@@ -430,8 +422,6 @@ def q221_streaming_session_replay(
             .orderBy("user_id", "session_start_us")
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -501,9 +491,8 @@ def q210_streaming_drift_replay(
         (F.count("*") / F.lit(float(n_half))).alias("share")
     )
 
-    base = tempfile.mkdtemp(prefix="mdp-q210-")
-    out, ckpt = f"{base}/log", f"{base}/ckpt"
-    try:
+    with _scratch("q210") as base:
+        out, ckpt = f"{base}/log", f"{base}/ckpt"
         q = start_mix_drift_stream(
             stream_table(spark, sf_dir, "events"), baseline, out, ckpt
         )
@@ -515,8 +504,6 @@ def q210_streaming_drift_replay(
             "n_novel_types",
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -580,72 +567,25 @@ def q244_streaming_multibatch_gate(
     index. Equality proves the stored-index equi-join — the O(batch)
     incremental path a continuous crawl runs — computes exactly the
     greedy first-seen-wins corpus the batch SQL defines.
-
-    The two-file split is replay scaffolding (a production crawl is
-    already multi-file); the distributed write stays in Spark and the
-    driver only renames the part files.
     """
-    import glob as _glob
-    import os as _os
-
     from movie_data_pipeline_spark.sources.registry import load_table
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
         start_dedup_gate_stream,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q244-")
-    src = f"{base}/src"
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    _os.makedirs(src)
-    try:
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q244")
-            dest = f"{src}/{i}_half.parquet"
-            _os.rename(part, dest)
-            # strictly increasing mtimes: the file-stream source lists
-            # oldest-first, so evens form batch 0, odds batch 1
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with _scratch("q244") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
+        # evens form batch 0, odds batch 1
+        stream = _staged_batches(
+            spark, base, [docs.filter(F.col("doc_id") % 2 == 0),
+                          docs.filter(F.col("doc_id") % 2 == 1)],
+            docs.schema, "q244",
         )
         q = start_dedup_gate_stream(stream, acc, idx, ckpt)
         _await(q, "q244")
-        # Multi-batch assertion from the QUERY'S OWN progress, not the
-        # index commit count (ADVICE r4): dedup_gate_batch_writer skips
-        # the index commit for a zero-survivor micro-batch, so a
-        # legitimately all-duplicate batch would false-alarm an
-        # index-commit assertion even though two batches ran.
-        fed = {
-            p["batchId"]
-            for p in q.recentProgress
-            if p.get("numInputRows", 0) > 0
-        }
-        if len(fed) < 2:
-            raise AssertionError(
-                f"q244: expected >=2 data-carrying micro-batches, got "
-                f"batchIds {sorted(fed)} — the stream did not run "
-                f"multi-batch"
-            )
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        _require_batches(q, 2, "q244")
+        return _accepted(spark, acc)
 
 
 @query(
@@ -702,9 +642,6 @@ def q267_streaming_closed_window_ledger(
     ledger (q244's machinery) gives readers snapshot isolation over
     exactly-once-published windows.
     """
-    import glob as _glob
-    import os as _os
-
     from movie_data_pipeline_spark.schemas import TESTDATA_SCHEMAS
     from movie_data_pipeline_spark.sources.registry import (
         _events_ts_is_nanos,
@@ -725,29 +662,13 @@ def q267_streaming_closed_window_ledger(
     us = "ts div 1000" if _events_ts_is_nanos(src_path) else "ts"
     raw = raw.withColumn("ts", F.expr(us))
 
-    base = tempfile.mkdtemp(prefix="mdp-q267-")
-    src = f"{base}/src"
-    table, ckpt = f"{base}/table", f"{base}/ckpt"
-    _os.makedirs(src)
-    try:
-        for i, half in enumerate(
-            (
-                raw.filter(F.col("user_id") % 2 == 0),
-                raw.filter(F.col("user_id") % 2 == 1),
-            )
-        ):
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q267")
-            dest = f"{src}/{i}_half.parquet"
-            _os.rename(part, dest)
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withColumn("ts", F.timestamp_micros(F.col("ts")))
-        )
+    with _scratch("q267") as base:
+        table, ckpt = f"{base}/table", f"{base}/ckpt"
+        stream = _staged_batches(
+            spark, base, [raw.filter(F.col("user_id") % 2 == 0),
+                          raw.filter(F.col("user_id") % 2 == 1)],
+            TESTDATA_SCHEMAS["events"], "q267",
+        ).withColumn("ts", F.timestamp_micros(F.col("ts")))
         stats = hourly_type_totals_stream(stream)
         q = start_versioned_append_stream(stats, table, ckpt)
         _await(q, "q267")
@@ -768,16 +689,7 @@ def q267_streaming_closed_window_ledger(
                 "merge-before-evict premise no longer holds and the "
                 "batch oracle cannot mirror this sink"
             )
-        fed = {
-            p["batchId"]
-            for p in q.recentProgress
-            if p.get("numInputRows", 0) > 0
-        }
-        if len(fed) < 2:
-            raise AssertionError(
-                f"q267: expected >=2 data-carrying micro-batches, got "
-                f"batchIds {sorted(fed)}"
-            )
+        _require_batches(q, 2, "q267")
         sink = VersionedTable(table).read(spark)
         n_sink = sink.count()
         n_all = (
@@ -800,8 +712,6 @@ def q267_streaming_closed_window_ledger(
             round4(F.col("sum_value").cast("double")).alias("sum_value"),
         ).orderBy("ts_hour_epoch", "event_type")
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -858,28 +768,18 @@ def q287_simhash_index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     prove convergence across a crash planted between the two commits.
     """
     from movie_data_pipeline_spark.sources.registry import table_path
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.events import stream_table
     from movie_data_pipeline_spark.streaming.sinks import (
         start_simhash_gate_stream,
     )
 
     _assert_single_file(table_path(sf_dir, "documents"), "q287")
-    base = tempfile.mkdtemp(prefix="mdp-q287-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with _scratch("q287") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_simhash_gate_stream(docs, acc, idx, ckpt, rung=1)
         _await(q, "q287")
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return _accepted(spark, acc)
 
 
 # --------------------------------------------------------------------------
@@ -955,60 +855,23 @@ def q292_simhash_multibatch_gate(
     round-9 ladder — computes exactly the greedy first-seen-wins
     corpus the batch SQL defines.
     """
-    import glob as _glob
-    import os as _os
-
     from movie_data_pipeline_spark.sources.registry import load_table
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
         start_simhash_gate_stream,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q292-")
-    src = f"{base}/src"
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    _os.makedirs(src)
-    try:
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q292")
-            dest = f"{src}/{i}_half.parquet"
-            _os.rename(part, dest)
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with _scratch("q292") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
+        stream = _staged_batches(
+            spark, base, [docs.filter(F.col("doc_id") % 2 == 0),
+                          docs.filter(F.col("doc_id") % 2 == 1)],
+            docs.schema, "q292",
         )
         q = start_simhash_gate_stream(stream, acc, idx, ckpt, rung=1)
         _await(q, "q292")
-        fed = {
-            p["batchId"]
-            for p in q.recentProgress
-            if p.get("numInputRows", 0) > 0
-        }
-        if len(fed) < 2:
-            raise AssertionError(
-                f"q292: expected >=2 data-carrying micro-batches, got "
-                f"batchIds {sorted(fed)} — the stream did not run "
-                f"multi-batch"
-            )
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        _require_batches(q, 2, "q292")
+        return _accepted(spark, acc)
 
 
 # --------------------------------------------------------------------------
@@ -1096,8 +959,6 @@ def q295_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     version VersionedTable reads; the scrub itself is one semi-join
     rewrite, linear in index size (operators/index_lifecycle).
     """
-    from functools import reduce
-
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         erase_documents,
     )
@@ -1110,9 +971,8 @@ def q295_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _assert_single_file(table_path(sf_dir, "documents"), "q295")
-    base = tempfile.mkdtemp(prefix="mdp-q295-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with _scratch("q295") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_simhash_gate_stream(docs, acc, idx, ckpt, rung=1)
         _await(q, "q295")
@@ -1120,7 +980,7 @@ def q295_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         acc_t, idx_t = VersionedTable(acc), VersionedTable(idx)
         # Snapshot the to-be-erased rows BEFORE the delete (they are
         # re-submitted in step 3); materialized because the temp dir
-        # is removed in finally.
+        # is removed on exit.
         resub = (
             acc_t.read(spark)
             .filter(F.expr("doc_id % 7 = 3"))
@@ -1143,32 +1003,23 @@ def q295_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx1 = idx_t.read(spark, version=1)
         idx2 = idx_t.read(spark, version=2)
 
-        def metric(name: str, frame: DataFrame) -> DataFrame:
-            return frame.agg(
-                F.count("*").cast("long").alias("value")
-            ).select(F.lit(name).alias("metric"), "value")
-
-        rows = [
-            metric("n_accepted_final", acc2),
-            metric("n_accepted_initial", acc0),
-            metric("n_erased", acc0.join(acc1, "doc_id", "left_anti")),
-            metric("n_index_rows_after_scrub", idx1),
-            metric("n_index_rows_before_scrub", idx0),
-            metric("n_index_rows_final", idx2),
-            metric(
+        return _metrics([
+            _metric("n_accepted_final", acc2),
+            _metric("n_accepted_initial", acc0),
+            _metric("n_erased", acc0.join(acc1, "doc_id", "left_anti")),
+            _metric("n_index_rows_after_scrub", idx1),
+            _metric("n_index_rows_before_scrub", idx0),
+            _metric("n_index_rows_final", idx2),
+            _metric(
                 "n_phantom_rows_after_scrub",
                 idx1.join(acc1, "doc_id", "left_anti"),
             ),
-            metric(
+            _metric(
                 "n_phantom_rows_before_scrub",
                 idx0.join(acc1, "doc_id", "left_anti"),
             ),
-            metric("n_reaccepted", acc2.join(acc1, "doc_id", "left_anti")),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            _metric("n_reaccepted", acc2.join(acc1, "doc_id", "left_anti")),
+        ])
 
 
 # --------------------------------------------------------------------------
@@ -1266,38 +1117,22 @@ def q296_simhash_rung_migration(
     index is byte-equivalent to an index BUILT at rung 2 over the same
     corpus — the migration loses nothing and invents nothing.
     """
-    import glob as _glob
-    import os as _os
-
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         migrate_simhash_index,
     )
     from movie_data_pipeline_spark.sources.registry import load_table
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
         start_simhash_gate_stream,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q296-")
-    acc, idx = f"{base}/acc", f"{base}/idx"
-    try:
-        streams = []
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            src = f"{base}/src{i}"
-            _os.makedirs(src)
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q296")
-            _os.rename(part, f"{src}/{i}_half.parquet")
-            streams.append(
-                spark.readStream.schema(docs.schema).parquet(src)
-            )
+    with _scratch("q296") as base:
+        acc, idx = f"{base}/acc", f"{base}/idx"
+        streams = _staged_streams(
+            spark, base, [docs.filter(F.col("doc_id") % 2 == 0),
+                          docs.filter(F.col("doc_id") % 2 == 1)],
+            docs.schema, "q296",
+        )
 
         q0 = start_simhash_gate_stream(
             streams[0], acc, idx, f"{base}/ckpt0", rung=1
@@ -1309,15 +1144,7 @@ def q296_simhash_rung_migration(
         )
         _await(q1, "q296 batch 1")
 
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return _accepted(spark, acc)
 
 
 # --------------------------------------------------------------------------
@@ -1404,9 +1231,8 @@ def q299_erasure_vacuum_compliance(
     )
 
     _assert_single_file(table_path(sf_dir, "documents"), "q299")
-    base = tempfile.mkdtemp(prefix="mdp-q299-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with _scratch("q299") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_simhash_gate_stream(docs, acc, idx, ckpt, rung=1)
         _await(q, "q299")
@@ -1428,17 +1254,6 @@ def q299_erasure_vacuum_compliance(
             spark, acc, [idx], "doc_id % 5 = 1", vacuum_keep_last=1
         )
 
-        def count_metric(name: str, frame: DataFrame) -> DataFrame:
-            return frame.agg(
-                F.count("*").cast("long").alias("value")
-            ).select(F.lit(name).alias("metric"), "value")
-
-        def lit_metric(name: str, value: int) -> DataFrame:
-            return spark.range(1).select(
-                F.lit(name).alias("metric"),
-                F.lit(int(value)).cast("long").alias("value"),
-            )
-
         def data_dirs(t: VersionedTable) -> int:
             return len(_os.listdir(_os.path.join(t.path, "data")))
 
@@ -1455,29 +1270,23 @@ def q299_erasure_vacuum_compliance(
         ]
         from functools import reduce
 
-        rows = [
-            count_metric("n_accepted_final", acc_t.read(spark)),
-            count_metric("n_accepted_initial", initial_ids),
-            lit_metric("n_data_dirs_corpus", data_dirs(acc_t)),
-            lit_metric("n_data_dirs_index", data_dirs(idx_t)),
-            count_metric("n_erased", erased_ids),
-            count_metric(
+        return _metrics([
+            _metric("n_accepted_final", acc_t.read(spark)),
+            _metric("n_accepted_initial", initial_ids),
+            _const(spark, "n_data_dirs_corpus", data_dirs(acc_t)),
+            _const(spark, "n_data_dirs_index", data_dirs(idx_t)),
+            _metric("n_erased", erased_ids),
+            _metric(
                 "n_erased_leaks_corpus",
                 reduce(DataFrame.unionByName, leaks_corpus),
             ),
-            count_metric(
+            _metric(
                 "n_erased_leaks_index",
                 reduce(DataFrame.unionByName, leaks_index),
             ),
-            lit_metric(
-                "n_versions_retained_corpus", len(acc_t.versions())
-            ),
-            lit_metric("n_versions_retained_index", len(idx_t.versions())),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            _const(spark, "n_versions_retained_corpus", len(acc_t.versions())),
+            _const(spark, "n_versions_retained_index", len(idx_t.versions())),
+        ])
 
 
 # --------------------------------------------------------------------------
@@ -1546,8 +1355,6 @@ def q301_minhash_index_erasure(
     re-submitted erased doc and each accepted doc contributes exactly
     4 band rows.
     """
-    from functools import reduce
-
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         erase_documents,
     )
@@ -1560,9 +1367,8 @@ def q301_minhash_index_erasure(
     )
 
     _assert_single_file(table_path(sf_dir, "documents"), "q301")
-    base = tempfile.mkdtemp(prefix="mdp-q301-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with _scratch("q301") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_dedup_gate_stream(docs, acc, idx, ckpt)
         _await(q, "q301")
@@ -1587,32 +1393,23 @@ def q301_minhash_index_erasure(
         idx1 = idx_t.read(spark, version=1)
         idx2 = idx_t.read(spark, version=2)
 
-        def metric(name: str, frame: DataFrame) -> DataFrame:
-            return frame.agg(
-                F.count("*").cast("long").alias("value")
-            ).select(F.lit(name).alias("metric"), "value")
-
-        rows = [
-            metric("n_accepted_final", acc2),
-            metric("n_accepted_initial", acc0),
-            metric("n_erased", acc0.join(acc1, "doc_id", "left_anti")),
-            metric("n_index_rows_after_scrub", idx1),
-            metric("n_index_rows_before_scrub", idx0),
-            metric("n_index_rows_final", idx2),
-            metric(
+        return _metrics([
+            _metric("n_accepted_final", acc2),
+            _metric("n_accepted_initial", acc0),
+            _metric("n_erased", acc0.join(acc1, "doc_id", "left_anti")),
+            _metric("n_index_rows_after_scrub", idx1),
+            _metric("n_index_rows_before_scrub", idx0),
+            _metric("n_index_rows_final", idx2),
+            _metric(
                 "n_phantom_rows_after_scrub",
                 idx1.join(acc1, "doc_id", "left_anti"),
             ),
-            metric(
+            _metric(
                 "n_phantom_rows_before_scrub",
                 idx0.join(acc1, "doc_id", "left_anti"),
             ),
-            metric("n_reaccepted", acc2.join(acc1, "doc_id", "left_anti")),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            _metric("n_reaccepted", acc2.join(acc1, "doc_id", "left_anti")),
+        ])
 
 
 # --------------------------------------------------------------------------
@@ -1694,38 +1491,22 @@ def q302_midstream_erasure_gate(
     batch-0 greedy corpus, the erased subset, batch-1 novelty decided
     against the KEPT docs' bands only, and the final union.
     """
-    import glob as _glob
-    import os as _os
-
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         erase_documents,
     )
     from movie_data_pipeline_spark.sources.registry import load_table
-    from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
         start_simhash_gate_stream,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q302-")
-    acc, idx = f"{base}/acc", f"{base}/idx"
-    try:
-        streams = []
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            src = f"{base}/src{i}"
-            _os.makedirs(src)
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q302")
-            _os.rename(part, f"{src}/{i}_half.parquet")
-            streams.append(
-                spark.readStream.schema(docs.schema).parquet(src)
-            )
+    with _scratch("q302") as base:
+        acc, idx = f"{base}/acc", f"{base}/idx"
+        streams = _staged_streams(
+            spark, base, [docs.filter(F.col("doc_id") % 2 == 0),
+                          docs.filter(F.col("doc_id") % 2 == 1)],
+            docs.schema, "q302",
+        )
 
         q0 = start_simhash_gate_stream(
             streams[0], acc, idx, f"{base}/ckpt0", rung=1
@@ -1737,15 +1518,7 @@ def q302_midstream_erasure_gate(
         )
         _await(q1, "q302 batch 1")
 
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return _accepted(spark, acc)
 
 
 # --------------------------------------------------------------------------
@@ -1873,8 +1646,6 @@ def q307_banding_migration_gate(
     banding migration loses nothing, invents nothing, and the gate's
     pinned-assignment validation holds across it.
     """
-    import os as _os
-
     from movie_data_pipeline_spark.operators.dedup import (
         measure_balanced_bit_blocks,
     )
@@ -1888,25 +1659,13 @@ def q307_banding_migration_gate(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q307-")
-    acc, idx = f"{base}/acc", f"{base}/idx"
-    try:
-        streams = []
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            src = f"{base}/src{i}"
-            _os.makedirs(src)
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q307")
-            _os.rename(part, f"{src}/{i}_half.parquet")
-            streams.append(
-                spark.readStream.schema(docs.schema).parquet(src)
-            )
+    with _scratch("q307") as base:
+        acc, idx = f"{base}/acc", f"{base}/idx"
+        streams = _staged_streams(
+            spark, base, [docs.filter(F.col("doc_id") % 2 == 0),
+                          docs.filter(F.col("doc_id") % 2 == 1)],
+            docs.schema, "q307",
+        )
 
         q0 = start_simhash_gate_stream(
             streams[0], acc, idx, f"{base}/ckpt0", rung=1
@@ -1925,15 +1684,7 @@ def q307_banding_migration_gate(
         )
         _await(q1, "q307 batch 1")
 
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return _accepted(spark, acc)
 
 
 # --------------------------------------------------------------------------
@@ -2022,7 +1773,6 @@ def q308_partitioned_index_erasure(
     """
     import json as _json
     import os as _os
-    from functools import reduce
 
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         erase_documents,
@@ -2036,9 +1786,8 @@ def q308_partitioned_index_erasure(
     )
 
     _assert_single_file(table_path(sf_dir, "documents"), "q308")
-    base = tempfile.mkdtemp(prefix="mdp-q308-")
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    try:
+    with _scratch("q308") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
         docs = stream_table(spark, sf_dir, "documents")
         q = start_simhash_gate_stream(
             docs, acc, idx, ckpt, rung=1, index_bucket_k=8
@@ -2082,34 +1831,20 @@ def q308_partitioned_index_erasure(
         idx0 = idx_t.read(spark, version=0)
         idx1 = idx_t.read(spark, version=1)
 
-        def metric(name: str, frame: DataFrame) -> DataFrame:
-            return frame.agg(
-                F.count("*").cast("long").alias("value")
-            ).select(F.lit(name).alias("metric"), "value")
-
-        def const(name: str, value: int) -> DataFrame:
-            return spark.createDataFrame(
-                [(name, int(value))], "metric STRING, value LONG"
-            )
-
-        rows = [
-            metric("n_accepted_final", acc2),
-            metric("n_accepted_initial", acc0),
-            const("n_buckets_touched", n_touched),
-            metric("n_erased", acc0.join(acc1, "doc_id", "left_anti")),
-            metric("n_index_rows_after_scrub", idx1),
-            metric("n_index_rows_before_scrub", idx0),
-            const("n_parts_inherited", n_inherited),
-            metric(
+        return _metrics([
+            _metric("n_accepted_final", acc2),
+            _metric("n_accepted_initial", acc0),
+            _const(spark, "n_buckets_touched", n_touched),
+            _metric("n_erased", acc0.join(acc1, "doc_id", "left_anti")),
+            _metric("n_index_rows_after_scrub", idx1),
+            _metric("n_index_rows_before_scrub", idx0),
+            _const(spark, "n_parts_inherited", n_inherited),
+            _metric(
                 "n_phantom_rows_after_scrub",
                 idx1.join(acc1, "doc_id", "left_anti"),
             ),
-            metric("n_reaccepted", acc2.join(acc1, "doc_id", "left_anti")),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            _metric("n_reaccepted", acc2.join(acc1, "doc_id", "left_anti")),
+        ])
 
 
 # --------------------------------------------------------------------------
@@ -2206,8 +1941,6 @@ def q311_centered_gate_replay(
     proves the pinned-threshold space is consistent across batches and
     the gate's greedy semantics are unchanged by the centered family.
     """
-    import os as _os
-
     from movie_data_pipeline_spark.sources.registry import load_table
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
@@ -2215,25 +1948,13 @@ def q311_centered_gate_replay(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q311-")
-    acc, idx = f"{base}/acc", f"{base}/idx"
-    try:
-        streams = []
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            src = f"{base}/src{i}"
-            _os.makedirs(src)
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q311")
-            _os.rename(part, f"{src}/{i}_half.parquet")
-            streams.append(
-                spark.readStream.schema(docs.schema).parquet(src)
-            )
+    with _scratch("q311") as base:
+        acc, idx = f"{base}/acc", f"{base}/idx"
+        streams = _staged_streams(
+            spark, base, [docs.filter(F.col("doc_id") % 2 == 0),
+                          docs.filter(F.col("doc_id") % 2 == 1)],
+            docs.schema, "q311",
+        )
 
         q0 = start_simhash_gate_stream(
             streams[0], acc, idx, f"{base}/ckpt0", rung=1, centered=True
@@ -2250,15 +1971,7 @@ def q311_centered_gate_replay(
         assert meta2["simhash_center_s"] == meta["simhash_center_s"]
         assert meta2["simhash_center_n"] == meta["simhash_center_n"]
 
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return _accepted(spark, acc)
 
 
 # --------------------------------------------------------------------------
@@ -2383,9 +2096,7 @@ def q312_gate_compaction_replay(
     isolation means a reader or the next batch sees pre- or
     post-compaction, never a mix.
     """
-    import os as _os
-    from functools import reduce
-
+    from movie_data_pipeline_spark.operators.util import overlap
     from movie_data_pipeline_spark.sources.registry import load_table
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
@@ -2394,51 +2105,25 @@ def q312_gate_compaction_replay(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q312-")
-    src = f"{base}/src"
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    _os.makedirs(src)
-    try:
-        for i in range(3):
-            out = f"{base}/third{i}"
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-                out
-            )
-            part = _one_part(out, "q312")
-            dest = f"{src}/{i}_third.parquet"
-            _os.rename(part, dest)
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with _scratch("q312") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
+        stream = _staged_batches(
+            spark, base,
+            [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)],
+            docs.schema, "q312",
         )
         q = start_simhash_gate_stream(stream, acc, idx, ckpt, rung=1)
         _await(q, "q312")
-        fed = {
-            p["batchId"]
-            for p in q.recentProgress
-            if p.get("numInputRows", 0) > 0
-        }
-        if len(fed) < 3:
-            raise AssertionError(
-                f"q312: expected >=3 data-carrying micro-batches, got "
-                f"batchIds {sorted(fed)}"
-            )
+        _require_batches(q, 3, "q312")
         acc_t, idx_t = VersionedTable(acc), VersionedTable(idx)
         n_commits_before = len(acc_t.manifest()["data_dirs"])
         accepted_before = acc_t.read(spark).localCheckpoint(eager=True)
 
         # Corpus and index compactions target DIFFERENT tables — two
-        # independent eager rewrites, overlapped from driver threads so
-        # each one's straggler tail back-fills the other (guide §2.6,
-        # the q288 pattern; deterministic — separate directories).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(acc_t.compact, spark, 1)
-            fb = pool.submit(idx_t.compact, spark, 1)
-            fa.result(), fb.result()
+        # independent eager rewrites, overlapped (guide §2.6, the q288
+        # pattern; deterministic — separate directories).
+        overlap(lambda: acc_t.compact(spark, 1),
+                lambda: idx_t.compact(spark, 1))
         dirs_acc = len(acc_t.manifest()["data_dirs"])
         dirs_idx = len(idx_t.manifest()["data_dirs"])
         # rung property must survive the compaction rewrite
@@ -2456,28 +2141,16 @@ def q312_gate_compaction_replay(
             accepted_before.select("doc_id"), "doc_id", "left_anti"
         ).count()
 
-        def const(metric: str, value: int) -> DataFrame:
-            return spark.createDataFrame(
-                [(metric, int(value))], "metric STRING, value LONG"
-            )
-
-        rows = [
-            const("n_accepted_after_resubmit", n_after),
-            const("n_accepted_final", n_final),
-            const("n_commits_corpus_before_compact", n_commits_before),
-            const("n_data_dirs_corpus_after_compact", dirs_acc),
-            const("n_data_dirs_index_after_compact", dirs_idx),
-            const(
-                "n_index_rows_final",
-                idx_t.read(spark).count(),
-            ),
-            const("n_reaccepted_after_compact", reaccepted),
-            const("n_resubmitted", resub.count()),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return _metrics([
+            _const(spark, "n_accepted_after_resubmit", n_after),
+            _const(spark, "n_accepted_final", n_final),
+            _const(spark, "n_commits_corpus_before_compact", n_commits_before),
+            _const(spark, "n_data_dirs_corpus_after_compact", dirs_acc),
+            _const(spark, "n_data_dirs_index_after_compact", dirs_idx),
+            _const(spark, "n_index_rows_final", idx_t.read(spark).count()),
+            _const(spark, "n_reaccepted_after_compact", reaccepted),
+            _const(spark, "n_resubmitted", resub.count()),
+        ])
 
 
 # --------------------------------------------------------------------------
@@ -2619,8 +2292,6 @@ def q313_recommended_gate_replay(
     (etl1.py full-refresh loads only); this is the extension surface's
     default build path.
     """
-    import os as _os
-
     from movie_data_pipeline_spark.operators.index_lifecycle import (
         count_phantom_index_rows,
         erase_documents,
@@ -2633,25 +2304,13 @@ def q313_recommended_gate_replay(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q313-")
-    acc, idx = f"{base}/acc", f"{base}/idx"
-    try:
-        streams = []
-        for i, half in enumerate(
-            (
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            )
-        ):
-            src = f"{base}/src{i}"
-            _os.makedirs(src)
-            out = f"{base}/half{i}"
-            half.coalesce(1).write.parquet(out)
-            part = _one_part(out, "q313")
-            _os.rename(part, f"{src}/{i}_half.parquet")
-            streams.append(
-                spark.readStream.schema(docs.schema).parquet(src)
-            )
+    with _scratch("q313") as base:
+        acc, idx = f"{base}/acc", f"{base}/idx"
+        streams = _staged_streams(
+            spark, base, [docs.filter(F.col("doc_id") % 2 == 0),
+                          docs.filter(F.col("doc_id") % 2 == 1)],
+            docs.schema, "q313",
+        )
 
         q0 = start_recommended_simhash_gate_stream(
             streams[0], acc, idx, f"{base}/ckpt0"
@@ -2678,15 +2337,7 @@ def q313_recommended_gate_replay(
         ), "erasure scrub did not take the pruned path"
         assert count_phantom_index_rows(spark, idx, acc) == 0
 
-        result = (
-            VersionedTable(acc)
-            .read(spark)
-            .select("doc_id", "source")
-            .orderBy("doc_id")
-        )
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return _accepted(spark, acc)
 
 
 # --------------------------------------------------------------------------
@@ -2811,8 +2462,8 @@ def q317_bucketed_gate_compaction(
     bounded by the 4096-partition fallback.
     """
     import os as _os
-    from functools import reduce
 
+    from movie_data_pipeline_spark.operators.util import overlap
     from movie_data_pipeline_spark.sources.registry import load_table
     from movie_data_pipeline_spark.sources.versioned import VersionedTable
     from movie_data_pipeline_spark.streaming.sinks import (
@@ -2821,24 +2472,12 @@ def q317_bucketed_gate_compaction(
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="mdp-q317-")
-    src = f"{base}/src"
-    acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
-    _os.makedirs(src)
-    try:
-        for i in range(3):
-            out = f"{base}/third{i}"
-            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-                out
-            )
-            part = _one_part(out, "q317")
-            dest = f"{src}/{i}_third.parquet"
-            _os.rename(part, dest)
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with _scratch("q317") as base:
+        acc, idx, ckpt = f"{base}/acc", f"{base}/idx", f"{base}/ckpt"
+        stream = _staged_batches(
+            spark, base,
+            [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)],
+            docs.schema, "q317",
         )
         q = start_simhash_gate_stream(
             stream, acc, idx, ckpt, rung=1, index_bucket_k=8
@@ -2876,12 +2515,8 @@ def q317_bucketed_gate_compaction(
 
         # Independent tables — overlap the two compaction rewrites
         # (guide §2.6, same as q312).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(acc_t.compact, spark, 1)
-            fb = pool.submit(idx_t.compact, spark, 1)
-            fa.result(), fb.result()
+        overlap(lambda: acc_t.compact(spark, 1),
+                lambda: idx_t.compact(spark, 1))
 
         post = files_per_bucket()
         max_after = max(len(fs) for fs in post.values())
@@ -2909,23 +2544,15 @@ def q317_bucketed_gate_compaction(
             accepted_before.select("doc_id"), "doc_id", "left_anti"
         ).count()
 
-        def const(metric: str, value: int) -> DataFrame:
-            return spark.createDataFrame(
-                [(metric, int(value))], "metric STRING, value LONG"
-            )
-
-        rows = [
-            const("max_files_per_bucket_after_compact", max_after),
-            const("n_accepted_final", accepted_before.count()),
-            const(
+        return _metrics([
+            _const(spark, "max_files_per_bucket_after_compact", max_after),
+            _const(spark, "n_accepted_final", accepted_before.count()),
+            _const(
+                spark,
                 "n_data_dirs_corpus_after_compact",
                 len(acc_t.manifest()["data_dirs"]),
             ),
-            const("n_index_rows_final", idx_t.read(spark).count()),
-            const("n_reaccepted_after_compact", reaccepted),
-            const("n_resubmitted", resub.count()),
-        ]
-        result = reduce(DataFrame.unionByName, rows).orderBy("metric")
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            _const(spark, "n_index_rows_final", idx_t.read(spark).count()),
+            _const(spark, "n_reaccepted_after_compact", reaccepted),
+            _const(spark, "n_resubmitted", resub.count()),
+        ])

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from movie_data_pipeline_spark.plans import REGISTRY
+from movie_data_pipeline_spark.plans.core import is_eager
 from tests.conftest import ORACLE_SF_DIR, TESTDATA_SF_DIR
 from tests.oracle_harness import compare, duckdb_connection
 
@@ -21,11 +22,10 @@ ROWS_ONLY_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 # audits. They stay hash-verified three ways: here under ``-m slow``,
 # by tools/driver_sim.py before every commit that touches them, and by
 # the driver's own rotating 50-query CORRECTNESS sample.
-_HEAVY_PARITY = {
-    n
-    for n, s in REGISTRY.items()
-    if {"streaming", "lifecycle"} & set(s.tags or ())
-} | {"q256b_margin_mining_lsh", "q74_winnowing_fingerprints"}
+_HEAVY_PARITY = {n for n, s in REGISTRY.items() if is_eager(s)} | {
+    "q256b_margin_mining_lsh",
+    "q74_winnowing_fingerprints",
+}
 
 
 def _parity_params(names):
@@ -155,15 +155,16 @@ def test_reverify_queue_live_state():
     q286's pre-rank count), round 11's q297 pricing-body
     factoring (shared with q306), and the round-12 optimization's
     plan-shape changes (the _dup_spans window rewrite: q268/q277/q281;
-    the containment_pairs direction explode: q149) are queued; the
-    ones whose latest green
+    the containment_pairs direction explode: q149) and round 15's
+    move of every replay builder onto the shared replay harness (the
+    27 eager names plus q286) are queued; the ones whose latest green
     row predates their change round are active (q82 was IN the r4
     window, so its r4 row already verifies the capped semantics and
     it auto-deactivates), and their placement never displaces a
     never-verified name from the window."""
     import __spark_entry__ as e
 
-    assert len(e._REVERIFY_QUEUE) == 55
+    assert len(e._REVERIFY_QUEUE) == 65
     for n in e._REVERIFY_QUEUE:
         assert n in REGISTRY
     active = set(e._FORCE_REVERIFY)

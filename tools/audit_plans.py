@@ -92,30 +92,40 @@ def explain_formatted(df) -> str:
     return df._jdf.queryExecution().explainString(em)
 
 
-# Tags whose builders run an entire streaming/lifecycle cadence
-# EAGERLY at build time (micro-batches, commits, maintenance) and
-# return a localCheckpoint scan: their returned "plan" is one
-# checkpoint read, so auditing it is vacuous while building it costs
-# minutes across the catalog. The fast CI tier skips them (round 13,
-# VERDICT r12 #1 — the driver's pytest window); the slow tier audits
-# everything.
-EAGER_TAGS = {"streaming", "lifecycle"}
+def is_bare_scan(df) -> bool:
+    """True iff ``df``'s optimized plan is one scan of an existing RDD
+    — what a (local)checkpointed frame reads."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LogicalRDD"
 
 
 def audit_all(
     spark, sf_dir: str, emit=None, skip_eager: bool = False
 ) -> list[str]:
+    """Smells over the whole catalog. Eager builders
+    (``plans/core.is_eager``) return one checkpoint read, so auditing
+    them is vacuous while building them costs minutes: ``skip_eager``
+    (the fast CI tier) skips them; the full sweep builds them and
+    checks the tag — an eager-tagged builder must return a bare
+    checkpoint scan."""
     from movie_data_pipeline_spark.plans import REGISTRY
+    from movie_data_pipeline_spark.plans.core import is_eager
 
     problems: list[str] = []
     for name, spec in sorted(REGISTRY.items()):
-        if skip_eager and EAGER_TAGS & set(getattr(spec, "tags", ()) or ()):
+        eager = is_eager(spec)
+        if skip_eager and eager:
             continue
         df = spec.build(spark, sf_dir)
         plan = explain_formatted(df)
         if emit:
             emit(f"{'=' * 30} {name}\n{plan}")
         problems.extend(audit_plan(name, plan, df=df))
+        if eager and not is_bare_scan(df):
+            problems.append(
+                f"{name}: tagged eager but returned a plan, not a "
+                "bare checkpoint scan"
+            )
         # builders that persist intermediates (dedup family) must not
         # bleed cache into later plans
         spark.catalog.clearCache()
